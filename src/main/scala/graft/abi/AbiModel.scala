@@ -41,14 +41,7 @@ final case class EvmContract(
     contractName: String,
     contractAddress: Option[String],
     events: List[AbiEvent],
-    functions: List[AbiFunction]) {
-  /** `{dataset}.{contract}_evt_{Name}` / `_call_{Name}`
-    * (`/root/reference/dags/chains/parser.py:114-117`). */
-  def eventTable(e: AbiEvent): String =
-    s"$datasetName.${contractName}_evt_${e.name}"
-  def callTable(f: AbiFunction): String =
-    s"$datasetName.${contractName}_call_${f.name}"
-}
+    functions: List[AbiFunction])
 
 object AbiJson {
   /** Optional decode-mode flag inside the ABI JSON:

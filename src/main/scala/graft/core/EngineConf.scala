@@ -1,7 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-task Spark resource profile — the engine-side equivalent of the
   * reference's `SparkResource` dataclass
   * (`/root/reference/dags/chains/resource_apply.py:17-31`): five knobs
@@ -24,9 +22,6 @@ final case class SparkResource(
     "spark.executor.instances" -> executorInstances.toString,
     "spark.driver.cores" -> driverCores.toString,
     "spark.driver.memory" -> s"${driverMemoryGb}g")
-
-  def applyTo(builder: SparkSession.Builder): SparkSession.Builder =
-    conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
 }
 
 /** The reference's two non-default profiles and their task-matching

@@ -19,9 +19,6 @@ import graft.functions._
   */
 object Enrich {
 
-  private def blockTs(blocks: DataFrame): Column =
-    timestamp_seconds(blocks("timestamp")).as("block_timestamp")
-
   /** evm_load_template.py:152-177 — projection + TIMESTAMP_SECONDS. */
   def blocks(raw: DataFrame): DataFrame =
     raw.select(

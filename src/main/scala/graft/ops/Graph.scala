@@ -441,8 +441,6 @@ object Graph {
     } // withLoopConf
   }
 
-  /** Shared setup: normalized edge list with out-degree folded on
-    * (loop-invariant, checkpointed once) + the node universe. */
   /** Loop-sized shuffle partition count — the canonical spelling is
     * [[GraftSession.loopPartitionsOf]]. */
   private[ops] def loopPartitions(maxRows: Long): Int =

@@ -31,41 +31,22 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
-  /** Exact brute-force top-k neighbors for a (small, broadcast) query
-    * set against the full corpus. Ties broken by neighbor id. */
+
   /** Shared spreading policy ([[Spread]]), unkeyed — pure per-row
     * cosine work, no keyed stage to co-locate. */
   private def spread(df: DataFrame): DataFrame = Spread(df)
 
+  /** Exact brute-force top-k neighbors for a (small, broadcast) query
+    * set against the full corpus. Ties broken by neighbor id. The junk
+    * filter ([[isIndexable]]) keeps the exact path CONSISTENT with
+    * lshTopK on a junk-bearing corpus: without it, Spark's NaN total
+    * ordering ranks a zero-norm/NaN pair (sim = 0/0 = NaN) FIRST under
+    * orderBy(sim.desc) — the exact baseline would then "beat" the LSH
+    * path by returning garbage neighbors. On a clean corpus the filter
+    * passes every row and results are bit-identical. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // junk filter keeps the exact path CONSISTENT with lshTopK on a
-    // junk-bearing corpus: without it, Spark's NaN total ordering
-    // ranks a zero-norm/NaN pair (sim = 0/0 = NaN) FIRST under
-    // orderBy(sim.desc) — the exact baseline would then "beat" the
-    // LSH path by returning garbage neighbors. On a clean corpus the
-    // filter passes every row and results are bit-identical.
-    val dim = vecDim(corpus, vecCol)
-    // norms precomputed per ROW (not per pair): sqrt(dot(v,v)) on the
-    // same list yields the identical double, so results are unchanged
-    // while the per-pair work drops from 3 array folds to 1
-    val c = spread(corpus).filter(isIndexable(col(vecCol), dim))
-      .select(col(idCol).as("n_id"),
-        col(vecCol).as("n_vec"), norm(col(vecCol)).as("n_norm"))
-    val q = queries.filter(isIndexable(col(vecCol), dim))
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        norm(col(vecCol)).as("q_norm"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    broadcast(q).crossJoin(c)
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("sim",
-        dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        col("sim"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    exactTopK(corpus, queries, k, idCol, vecCol, None)
 
   /** Deterministic pseudo-random hyperplane component: Lehmer-style
     * multiplies mod 2³¹−1 INTERLEAVED WITH XOR-SHIFT steps over the
@@ -183,6 +164,279 @@ object Similarity {
     explode(array((0 until nTables).map(t =>
       struct(lit(t).as("t"), lshBucket(vec, nPlanes, t, dim).as("b"))): _*))
 
+  // Shared stages: every ANN entry point below composes these, and each
+  // decision is documented once, on the stage that makes it.
+
+  /** Unit-vector head of the normalized paths (PQ, IVF×PQ, int8,
+    * k-means, k-center): junk rows out ([[isIndexable]]), normalize
+    * ([[normalized]]), rows without a direction out, then project the
+    * id and the unit vector through `id` / `u` — `(id, u)` by
+    * default. */
+  private def unitVecs(df: DataFrame, dim: Int, idCol: String,
+      vecCol: String, id: Column => Column = _.as("id"),
+      u: Column => Column = _.as("u")): DataFrame =
+    normalized(df.filter(isIndexable(col(vecCol), dim)), vecCol)
+      .filter(col(s"${vecCol}_unit").isNotNull)
+      .select(id(col(idCol)), u(col(s"${vecCol}_unit")))
+
+  /** One side of a cosine pair stage: `(p_id, p_vec, p_norm)`, plus
+    * `p_label` when a label column rides along. Norms are precomputed
+    * per ROW, not per pair: sqrt(dot(v,v)) on the same list yields the
+    * identical double, so results are unchanged while the per-pair work
+    * drops from 3 array folds to 1. */
+  private def side(df: DataFrame, p: String, idCol: String,
+      vecCol: String, labelCol: Option[String] = None): DataFrame =
+    df.select(Seq(col(idCol).as(s"${p}_id"), col(vecCol).as(s"${p}_vec"),
+      norm(col(vecCol)).as(s"${p}_norm")) ++
+      labelCol.map(l => col(l).as(s"${p}_label")): _*)
+
+  /** Cosine between the rows of two [[side]] frames `a` and `b`. */
+  private def sideCos(a: String, b: String): Column =
+    dot(col(s"${a}_vec"), col(s"${b}_vec")) /
+      (col(s"${a}_norm") * col(s"${b}_norm"))
+
+  /** Top-k tail of every ranked path: number each query's scored
+    * candidates by (sim desc, n_id) and keep the first k. `labelled`
+    * carries the hard-negative label columns through. */
+  private def rankTopK(scored: DataFrame, k: Int,
+      labelled: Boolean = false): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("sim").desc, col("n_id"))
+    val ids = if (labelled) Seq("q_id", "q_label", "n_id", "n_label")
+      else Seq("q_id", "n_id")
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(ids.map(col) :+ col("rank").cast("long").as("rank") :+
+        col("sim"): _*)
+  }
+
+  /** Exact cosine top-k over [[side]]-shaped `q` × `n` pairs: self
+    * pairs out, and same-label pairs too when `labelled` (hard
+    * negatives), then [[rankTopK]]. */
+  private def cosTopK(pairs: DataFrame, k: Int,
+      labelled: Boolean): DataFrame = {
+    val others = pairs.filter(col("q_id") =!= col("n_id"))
+    val neg = if (labelled) others.filter(col("q_label") =!= col("n_label"))
+      else others
+    rankTopK(neg.withColumn("sim", sideCos("q", "n")), k, labelled)
+  }
+
+  /** The deterministic coarse quantizer's seed slice: every row whose id
+    * is a multiple of `every` — no RNG, no iterative training, and
+    * reproducible in plain SQL. */
+  private def strideSlice(df: DataFrame, idCol: String,
+      every: Long): DataFrame =
+    df.filter(pmod(col(idCol), lit(every)) === 0)
+
+  /** Fail loudly when a stride slice is empty but its population is
+    * not: zero centroids mean zero cells, and the caller would silently
+    * read "nothing assigned" (an empty append, a dedup that keeps every
+    * duplicate) as a result. An empty population legitimately yields
+    * empty output. At most two limit-1 probes. */
+  private def requireStrideHits(slice: DataFrame, population: DataFrame,
+      msg: => String): Unit =
+    if (slice.isEmpty && !population.isEmpty)
+      throw new IllegalArgumentException(msg)
+
+  /** Stride centroids over a unit frame `(id, u)` → `(c_id, cu)`,
+    * broadcast-sized and checkpointed: assignment, probes and guards all
+    * read the small frame instead of re-running the scan lineage. */
+  private def unitCentroids(emb: DataFrame, every: Long): DataFrame =
+    strideSlice(emb, "id", every)
+      .select(col("id").as("c_id"), col("u").as("cu"))
+      .localCheckpoint()
+
+  /** Nearest cell per vector: argmax sim ≡ argmin ns = −sim with `cid`
+    * tie-break, as a partial-aggregatable `min(struct(ns, cid))`. −1.0·x
+    * is exact in IEEE, so this is order-identical to the oracles'
+    * ORDER BY sim DESC, cid (sub-ulp ties would need EQUAL doubles to
+    * diverge). The |vectors|·#cells intermediate collapses map-side
+    * before any exchange — no per-vector window sort. SKINNY: (id, ns,
+    * cid) is projected BEFORE the aggregate, so vectors never ride the
+    * agg buffer (a first(vec) formulation is array-payload churn
+    * through the partial aggregate, measured superlinear on the kmeans
+    * ramp — SCALE.md round 12); callers re-attach vectors by an id
+    * equi-join where needed. `pairs` is vectors × candidate cells: a
+    * broadcast cross or an equi-join. */
+  private def nearestCell(pairs: DataFrame, id: String, sim: Column,
+      cid: String = "c_id"): DataFrame =
+    pairs.select(col(id), (lit(-1.0) * sim).as("ns"), col(cid))
+      .groupBy(col(id))
+      .agg(min(struct(col("ns"), col(cid))).getField(cid).as(cid))
+
+  /** IVF×PQ cell assignment of unit vectors `(id, u)` against
+    * [[unitCentroids]]: the [[nearestCell]] argmin. Spelled apart
+    * because its Project emits (id, c_id, ns) where nearestCell's
+    * emits (id, ns, c_id); merging would reorder that Project in the
+    * IVF×PQ plans. */
+  private def unitCells(emb: DataFrame, cents: DataFrame): DataFrame =
+    emb.crossJoin(broadcast(cents))
+      .withColumn("ns", lit(-1.0) * dot(col("u"), col("cu")))
+      .groupBy(col("id"))
+      .agg(min(struct(col("ns"), col("c_id"))).getField("c_id").as("c_id"))
+
+  /** Release discipline of the eager entry points (the
+    * Dedup.containmentPairs shape): materialize the small result, then
+    * free the corpus-sized cache and the checkpointed frames HERE — a
+    * lazy return would leave a full corpus copy in executor storage
+    * for the rest of a catalog run. Checkpointed frames need
+    * [[graft.core.Checkpoints.release]]; Dataset.unpersist cannot
+    * reach their blocks. `release = false` returns the LAZY frame — for
+    * plan inspection (ExplainSpec pins shapes a checkpointed frame
+    * would hide behind Scan ExistingRDD) — and leaves every frame
+    * materialized for the caller to manage. `checkpointed` holds only
+    * frames the entry point itself checkpointed: release frees every
+    * LogicalRDD leaf of a frame's plan, and a lazy frame's leaves are
+    * the caller's own checkpoints. */
+  private def finish(out: DataFrame, release: Boolean,
+      cached: Seq[DataFrame], checkpointed: Seq[DataFrame]): DataFrame =
+    if (!release) out
+    else {
+      val o = out.localCheckpoint()
+      cached.foreach(_.unpersist(blocking = false))
+      checkpointed.foreach(graft.core.Checkpoints.release)
+      o
+    }
+
+  /** PQ subspace width; dim must split into m equal subspaces. */
+  private def subDim(dim: Int, m: Int): Int = {
+    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
+    dim / m
+  }
+
+  /** A frozen product quantizer (see [[pqCodebook]]): the checkpointed
+    * codebook `cb`, its per-subspace rows `cbsub` (j, cid, cv, cn2), the
+    * explode of `u` into (j, sv) subvectors, and `nCb`, the ACTUAL
+    * centroid count. Encode, LUT build and ADC search are its
+    * methods, so index, append and search derive codes identically. */
+  private final class Pq(val cb: DataFrame, cbsub: DataFrame,
+      subs: Column, m: Int, nCb: Int) {
+
+    /** Encode `(id, u)` → `(id, code)`: argmin_cid ||sv − cv||² per
+      * (vector, subspace). The score is the order-equivalent
+      * |cv|² − 2·sv·cv (the |sv|² term is constant per (vector,
+      * subspace) and drops out of the argmin), so the hot fold is the
+      * codegen'd DotProductFold instead of an interpreted (a−b)² lambda
+      * over the m·ksub-times-exploded corpus — the encode pass is the
+      * dominant cost. The DuckDB oracles spell the IDENTICAL arithmetic,
+      * so fp rounding of near-tied centroids agrees cross-engine by
+      * construction. Winner via partial-aggregatable min(struct): the
+      * exploded intermediate collapses map-side, no window sort. */
+    def encode(vecs: DataFrame): DataFrame = {
+      val d2 = col("cn2") - lit(2.0) * dot(col("sv"), col("cv"))
+      vecs.select(col("id"), subs.as("s"))
+        .select(col("id"), col("s.j"), col("s.sv"))
+        .join(broadcast(cbsub), "j")
+        .withColumn("d2", d2)
+        .groupBy(col("id"), col("j"))
+        .agg(min(struct(col("d2"), col("cid"))).getField("cid").as("code_j"))
+        .groupBy(col("id"))
+        .agg(transform(sort_array(collect_list(struct(col("j"),
+          col("code_j")))), x => x.getField("code_j")).as("code"))
+    }
+
+    /** Per-query lookup tables `(q_id, lut)`: lut[j·nCb + cid] =
+      * dot(q_sub_j, cv). The query's own unit vector is NOT carried
+      * here: it would ride every (query, corpus-vector) row through the
+      * shortlist window's shuffle (~4·dim bytes against the ~30-byte ADC
+      * payload, a 10-15× exchange inflation on the dominant pass).
+      * [[search]] joins it back from the tiny broadcast query side
+      * AFTER the ≤shortlist-per-query filter, where the re-rank needs
+      * it. */
+    def luts(q: DataFrame): DataFrame =
+      q.select(col("id").as("q_id"), subs.as("s"))
+        .select(col("q_id"), col("s.j"), col("s.sv"))
+        .join(broadcast(cbsub), "j")
+        .withColumn("lv", dot(col("sv"), col("cv")))
+        .groupBy(col("q_id"))
+        .agg(transform(sort_array(collect_list(struct(col("j"), col("cid"),
+          col("lv")))), x => x.getField("lv")).as("lut"))
+
+    /** ADC search + exact re-rank over candidate rows `(q_id, n_id, lut,
+      * code)`: sim ≈ Σ_j lut[j·nCb + code_j] folded in j order
+      * (sequential, bit-stable) over codes only — the memory-bound
+      * pass — then the top `shortlist` per query by (adc, n_id) are
+      * re-ranked exactly on unit vectors from `emb` / `q` (the query
+      * vector rejoins only here, see [[luts]]). The LUT stride is the ACTUAL centroid count: a corpus with fewer
+      * than ksub indexable vectors yields a shorter codebook, and
+      * striding by the requested ksub would read other subspaces'
+      * entries (or null past the end) and return silently wrong
+      * neighbors. */
+    def search(cands: DataFrame, emb: DataFrame, q: DataFrame, k: Int,
+        shortlist: Int): DataFrame = {
+      val adc = aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
+        (acc, j) => acc +
+          element_at(col("lut"), (j * nCb + element_at(col("code"), j + 1))
+            .cast("int") + 1))
+      val shortW = Window.partitionBy(col("q_id"))
+        .orderBy(col("adc").desc, col("n_id"))
+      val short = cands.select(col("q_id"), col("n_id"), adc.as("adc"))
+        .withColumn("sr", row_number().over(shortW))
+        .filter(col("sr") <= shortlist)
+      rankTopK(short
+        .join(emb.select(col("id").as("n_id"), col("u").as("nu")), "n_id")
+        .join(broadcast(q.select(col("id").as("q_id"), col("u").as("qu"))),
+          "q_id")
+        .withColumn("sim", dot(col("qu"), col("nu"))), k)
+    }
+  }
+
+  /** PQ codebook over a unit frame `(id, u)`: per subspace j of `dsub`
+    * components, the j-th subvector of the ksub vectors ranked first by
+    * the Lehmer permutation [[Sampling.hashU31]] (a deterministic
+    * pseudo-random sample — consecutive-id slices would inherit the
+    * corpus' label clustering), cid by rank. One bounded count over the
+    * ksub-row frame fixes the LUT stride (see [[Pq.search]]). */
+  private def pqCodebook(emb: DataFrame, m: Int, dsub: Int, ksub: Int,
+      op: String): Pq = {
+    val cbW = Window.orderBy(col("hk"), col("id"))
+    val cb = emb.withColumn("hk", Sampling.hashU31(col("id")))
+      .orderBy(col("hk"), col("id")).limit(ksub)
+      .withColumn("cid", row_number().over(cbW) - 1)
+      .localCheckpoint() // consumed 3x (count + 2 joins): cut the lineage once
+    val nCb = cb.count().toInt
+    require(nCb > 0, s"$op: no indexable vectors to build a codebook from")
+    val subs = explode(array((0 until m).map(j =>
+      struct(lit(j).as("j"),
+        slice(col("u"), j * dsub + 1, dsub).as("sv"))): _*))
+    val cbsub = cb.select(col("cid"), subs.as("s"))
+      .select(col("cid"), col("s.j"), col("s.sv").as("cv"),
+        dot(col("s.sv"), col("s.sv")).as("cn2"))
+    new Pq(cb, cbsub, subs, m, nCb)
+  }
+
+  /** Hamming-1 multi-probe: each banded row's (t, b) plus every
+    * single-bit flip of b, built from the materialized bucket id, so
+    * the plane projections run once regardless of probe count. */
+  private def hamming1(banded: DataFrame, id: String,
+      nPlanes: Int): DataFrame = {
+    val probes = array((col("b") +: (0 until nPlanes).map(p =>
+      col("b").bitwiseXOR(lit(1L << p)))): _*)
+    banded.select(col(id), col("t"), explode(probes).as("b"))
+  }
+
+  /** SemDeDup's within-cell pair stage over `(m_id, m_vec, m_norm,
+    * c_id)` cells: self-join keyed on `c_id`, `a_id < b_id`, exact
+    * cosine ≥ threshold — Σ|cell|² candidates, no all-pairs term. */
+  private def cellPairs(cells: DataFrame, threshold: Double): DataFrame = {
+    val x = cells.select(col("c_id"), col("m_id").as("a_id"),
+      col("m_vec").as("va"), col("m_norm").as("na"))
+    val y = cells.select(col("c_id"), col("m_id").as("b_id"),
+      col("m_vec").as("vb"), col("m_norm").as("nb"))
+    x.join(y, Seq("c_id")).filter(col("a_id") < col("b_id"))
+      .withColumn("sim", dot(col("va"), col("vb")) / (col("na") * col("nb")))
+      .filter(col("sim") >= threshold)
+      .select("a_id", "b_id")
+  }
+
+  /** Integer-exact squared L2 between int8 codes `v` and one literal
+    * center: per-element (x−y)² ≤ 254² fits int, the running sum is
+    * long. */
+  private def int8D2(v: Column, center: Seq[Int]): Column =
+    aggregate(
+      zip_with(v, array(center.map(lit): _*), (x, y) => (x - y) * (x - y)),
+      lit(0L), (acc, e) => acc + e.cast("long"))
+
   /** IVF (inverted-file) ANN: a deterministic coarse quantizer —
     * centroids are a fixed slice of the corpus (every `centroidEvery`-th
     * vector) — assigns each vector to its nearest centroid cell; queries
@@ -192,14 +446,9 @@ object Similarity {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       centroidEvery: Int = 50, nProbe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val dim = vecDim(corpus, vecCol)
-    val centroids = corpus.filter(isIndexable(col(vecCol), dim))
-      .filter(pmod(col(idCol), lit(centroidEvery)) === 0)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
-    ivfTopKCore(corpus, queries, k, centroids, nProbe, idCol, vecCol,
-      dim)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    strideIvfTopK(corpus, queries, k, centroidEvery, nProbe, idCol, vecCol,
+      None)
 
   /** [[ivfTopK]] against an EXPLICIT centroid frame (`c_id`, `c_vec`)
     * — the composition point for a data-adaptive coarse quantizer:
@@ -222,6 +471,19 @@ object Similarity {
       nProbe, idCol, vecCol, dim)
   }
 
+  /** [[ivfTopKCore]] over [[strideSlice]] centroids `(c_id, c_vec)` of
+    * the junk-filtered corpus — [[ivfTopK]] and [[hardNegativesIvf]]. */
+  private def strideIvfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+      centroidEvery: Int, nProbe: Int, idCol: String, vecCol: String,
+      negLabelCol: Option[String]): DataFrame = {
+    val dim = vecDim(corpus, vecCol)
+    val centroids = strideSlice(corpus.filter(isIndexable(col(vecCol), dim)),
+        idCol, centroidEvery)
+      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
+    ivfTopKCore(corpus, queries, k, centroids, nProbe, idCol, vecCol, dim,
+      negLabelCol)
+  }
+
   private def ivfTopKCore(corpus: DataFrame, queries: DataFrame,
       k: Int, centroids: DataFrame, nProbe: Int,
       idCol: String, vecCol: String, dim: Int,
@@ -229,6 +491,9 @@ object Similarity {
     // same junk filter as bruteForceTopK/lshTopK on both row sides
     val corpusC = corpus.filter(isIndexable(col(vecCol), dim))
     val queriesC = queries.filter(isIndexable(col(vecCol), dim))
+    // the top-n cells by cosine, window-ranked: probes need n > 1, so
+    // this is not the min(struct) argmin of nearestCell (its plan, and
+    // the q_knn_ivf oracle, rank with a window)
     def nearestCells(df: DataFrame, id: String, vec: String, n: Int) = {
       val w = Window.partitionBy(col(id))
         .orderBy(col("c_sim").desc, col("c_id"))
@@ -238,34 +503,13 @@ object Similarity {
         .filter(col("c_rank") <= n)
         .drop("c_vec", "c_sim", "c_rank")
     }
-    def lbl(as: String): Seq[Column] =
-      negLabelCol.map(c => col(c).as(as)).toSeq
     val cells = nearestCells(
-      spread(corpusC).select(Seq(col(idCol).as("n_id"),
-        col(vecCol).as("n_vec"), norm(col(vecCol)).as("n_norm")) ++
-        lbl("n_label"): _*), "n_id", "n_vec", 1)
+      side(spread(corpusC), "n", idCol, vecCol, negLabelCol),
+      "n_id", "n_vec", 1)
     val probes = nearestCells(
-      queriesC.select(Seq(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        norm(col(vecCol)).as("q_norm")) ++
-        lbl("q_label"): _*), "q_id", "q_vec", nProbe)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    val paired = probes.join(cells, Seq("c_id"))
-      .filter(col("q_id") =!= col("n_id"))
-    val filtered = if (negLabelCol.isDefined)
-      paired.filter(col("q_label") =!= col("n_label")) else paired
-    val outCols =
-      Seq(col("q_id")) ++
-      negLabelCol.map(_ => col("q_label")).toSeq ++
-      Seq(col("n_id")) ++
-      negLabelCol.map(_ => col("n_label")).toSeq ++
-      Seq(col("rank").cast("long").as("rank"), col("sim"))
-    filtered
-      .withColumn("sim",
-        dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(outCols: _*)
+      side(queriesC, "q", idCol, vecCol, negLabelCol),
+      "q_id", "q_vec", nProbe)
+    cosTopK(probes.join(cells, Seq("c_id")), k, negLabelCol.isDefined)
   }
 
   /** Hard-NEGATIVE mining for contrastive / retrieval training data:
@@ -278,25 +522,20 @@ object Similarity {
     * SimilaritySpec. */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      labelCol: String = "label"): DataFrame = {
+      labelCol: String = "label"): DataFrame =
+    exactTopK(corpus, queries, k, idCol, vecCol, Some(labelCol))
+
+  /** Broadcast-query × corpus cosine top-k: [[bruteForceTopK]], and
+    * [[hardNegatives]] when a label column rides along. */
+  private def exactTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+      idCol: String, vecCol: String,
+      negLabelCol: Option[String]): DataFrame = {
     val dim = vecDim(corpus, vecCol)
-    val c = spread(corpus).filter(isIndexable(col(vecCol), dim))
-      .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-        norm(col(vecCol)).as("n_norm"), col(labelCol).as("n_label"))
-    val q = queries.filter(isIndexable(col(vecCol), dim))
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        norm(col(vecCol)).as("q_norm"), col(labelCol).as("q_label"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    broadcast(q).crossJoin(c)
-      .filter(col("q_id") =!= col("n_id") &&
-        col("q_label") =!= col("n_label"))
-      .withColumn("sim",
-        dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("q_label"), col("n_id"), col("n_label"),
-        col("rank").cast("long").as("rank"), col("sim"))
+    val c = side(spread(corpus).filter(isIndexable(col(vecCol), dim)), "n",
+      idCol, vecCol, negLabelCol)
+    val q = side(queries.filter(isIndexable(col(vecCol), dim)), "q",
+      idCol, vecCol, negLabelCol)
+    cosTopK(broadcast(q).crossJoin(c), k, negLabelCol.isDefined)
   }
 
   /** Scale path for [[hardNegatives]]: IVF cell routing (the
@@ -309,14 +548,9 @@ object Similarity {
   def hardNegativesIvf(corpus: DataFrame, queries: DataFrame, k: Int,
       centroidEvery: Int = 50, nProbe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      labelCol: String = "label"): DataFrame = {
-    val dim = vecDim(corpus, vecCol)
-    val centroids = corpus.filter(isIndexable(col(vecCol), dim))
-      .filter(pmod(col(idCol), lit(centroidEvery)) === 0)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
-    ivfTopKCore(corpus, queries, k, centroids, nProbe, idCol, vecCol,
-      dim, negLabelCol = Some(labelCol))
-  }
+      labelCol: String = "label"): DataFrame =
+    strideIvfTopK(corpus, queries, k, centroidEvery, nProbe, idCol, vecCol,
+      Some(labelCol))
 
   /** ANN top-k: candidates = union over nTables of same-bucket rows,
     * dedup, exact cosine rank. At scale each table bucket holds
@@ -358,25 +592,12 @@ object Similarity {
       .select(col(idCol).as("q_id"),
         tableBuckets(col(vecCol), nPlanes, nTables, dim).as("tb"))
       .select(col("q_id"), col("tb.t"), col("tb.b"))
-    val q =
-      if (!multiProbe) qBase
-      else {
-        // probe set = the bucket itself + each single-bit flip; built
-        // from the materialized bucket id, so the plane projections
-        // run once regardless of probe count
-        val probes = array((col("b") +: (0 until nPlanes).map(p =>
-          col("b").bitwiseXOR(lit(1L << p)))): _*)
-        qBase.select(col("q_id"), col("t"), explode(probes).as("b"))
-      }
+    val q = if (!multiProbe) qBase else hamming1(qBase, "q_id", nPlanes)
     // one row per vector for the post-dedup fetch joins
-    val cVecs = spread(corpus).filter(isIndexable(col(vecCol), dim))
-      .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-        norm(col(vecCol)).as("n_norm"))
-    val qVecs = queries.filter(isIndexable(col(vecCol), dim))
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        norm(col(vecCol)).as("q_norm"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
+    val cVecs = side(spread(corpus).filter(isIndexable(col(vecCol), dim)),
+      "n", idCol, vecCol)
+    val qVecs = side(queries.filter(isIndexable(col(vecCol), dim)), "q",
+      idCol, vecCol)
     // dedup multi-table collisions on the ID PAIR alone, then fetch
     // vectors for the surviving pairs (the embedNearDupLsh shape):
     // the distinct's shuffle carries two longs per candidate instead
@@ -387,15 +608,10 @@ object Similarity {
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"))
       .distinct() // a pair may collide in several tables/probes
-    candidates
+    rankTopK(candidates
       .join(qVecs, "q_id")
       .join(cVecs, "n_id")
-      .withColumn("sim",
-        dot(col("q_vec"), col("n_vec")) / (col("q_norm") * col("n_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        col("sim"))
+      .withColumn("sim", sideCos("q", "n")), k)
   }
 
   /** Embedding near-duplicate pairs at corpus scale: sign-LSH blocking
@@ -434,13 +650,7 @@ object Similarity {
       .select(col("id"),
         tableBuckets(col("vec"), nPlanes, nTables, dim).as("tb"))
       .select(col("id"), col("tb.t"), col("tb.b"))
-    val probeSide =
-      if (!multiProbe) bands
-      else {
-        val probes = array((col("b") +: (0 until nPlanes).map(p =>
-          col("b").bitwiseXOR(lit(1L << p)))): _*)
-        bands.select(col("id"), col("t"), explode(probes).as("b"))
-      }
+    val probeSide = if (!multiProbe) bands else hamming1(bands, "id", nPlanes)
     val cands = probeSide.select(col("t"), col("b"), col("id").as("a_id"))
       .join(bands.select(col("t"), col("b"), col("id").as("b_id")),
         Seq("t", "b"))
@@ -475,22 +685,14 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val dim = vecDim(corpus, vecCol)
     def q8(df: DataFrame): DataFrame =
-      normalized(df.filter(isIndexable(col(vecCol), dim)), vecCol)
-        .filter(col(s"${vecCol}_unit").isNotNull)
-        .select(col(idCol), quantizeInt8(col(s"${vecCol}_unit")).as("v8"))
+      unitVecs(df, dim, idCol, vecCol, identity, quantizeInt8(_).as("v8"))
     val c = spread(q8(corpus))
       .select(col(idCol).as("n_id"), col("v8").as("n_v8"))
     val q = q8(queries).select(col(idCol).as("q_id"), col("v8").as("q_v8"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    broadcast(q).crossJoin(c)
+    rankTopK(broadcast(q).crossJoin(c)
       .filter(col("q_id") =!= col("n_id"))
       .withColumn("sim", dot(col("q_v8"), col("n_v8")) / lit(127.0 * 127.0))
-      .filter(col("sim").isNotNull) // dim-mismatch survivors
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        col("sim"))
+      .filter(col("sim").isNotNull), k) // dim-mismatch survivors
   }
 
   /** Product-quantization ANN with asymmetric-distance search and exact
@@ -524,114 +726,20 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       release: Boolean = true): DataFrame = {
     val dim = vecDim(corpus, vecCol)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    val shortlist = math.max(k, shortlistFactor * k)
-    def unit(df: DataFrame): DataFrame =
-      normalized(df.filter(isIndexable(col(vecCol), dim)), vecCol)
-        .filter(col(s"${vecCol}_unit").isNotNull)
-        .select(col(idCol).as("id"), col(s"${vecCol}_unit").as("u"))
+    val dsub = subDim(dim, m)
     // consumed 3x (codebook build, the dominant encode scan, the
     // re-rank join) — cache the normalized corpus or each consumer
     // re-runs the parquet scan + junk filter + O(d) normalization
-    val emb = spread(unit(corpus))
+    val emb = spread(unitVecs(corpus, dim, idCol, vecCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val q = unit(queries)
-    // codebook: ksub Lehmer-permutation-ranked vectors, cid by rank
-    val cbW = Window.orderBy(col("hk"), col("id"))
-    val cb = emb.withColumn("hk", Sampling.hashU31(col("id")))
-      .orderBy(col("hk"), col("id")).limit(ksub)
-      .withColumn("cid", row_number().over(cbW) - 1)
-      .localCheckpoint() // consumed 3x (count + 2 joins): cut the lineage once
-    // the LUT stride must be the ACTUAL centroid count: a corpus with
-    // fewer than ksub indexable vectors yields a shorter codebook, and
-    // striding by the requested ksub would read other subspaces'
-    // entries (or null past the end) and return silently wrong
-    // neighbors. One bounded count over the ksub-row frame.
-    val nCb = cb.count().toInt
-    require(nCb > 0, "pqTopK: no indexable vectors to build a codebook from")
-    val subs = explode(array((0 until m).map(j =>
-      struct(lit(j).as("j"),
-        slice(col("u"), j * dsub + 1, dsub).as("sv"))): _*))
-    val cbsub = cb.select(col("cid"), subs.as("s"))
-      .select(col("cid"), col("s.j"), col("s.sv").as("cv"),
-        dot(col("s.sv"), col("s.sv")).as("cn2"))
-    // encode: argmin_cid ||sub − cv||² per (vector, subspace). The
-    // score is the order-equivalent |cv|² − 2·sv·cv (the |sv|² term is
-    // constant per (vector, subspace) and drops out of the argmin), so
-    // the hot fold is the codegen'd DotProductFold instead of an
-    // interpreted (a−b)² lambda over the m·ksub-times-exploded corpus
-    // — the encode pass is the operator's dominant cost. The DuckDB
-    // oracle spells the IDENTICAL arithmetic, so fp rounding of
-    // near-tied centroids agrees cross-engine by construction. Winner
-    // via partial-aggregatable min(struct).
-    val d2 = col("cn2") - lit(2.0) * dot(col("sv"), col("cv"))
-    val codes = emb.select(col("id"), subs.as("s"))
-      .select(col("id"), col("s.j"), col("s.sv"))
-      .join(broadcast(cbsub), "j")
-      .withColumn("d2", d2)
-      .groupBy(col("id"), col("j"))
-      .agg(min(struct(col("d2"), col("cid"))).getField("cid").as("code_j"))
-      .groupBy(col("id"))
-      .agg(transform(sort_array(collect_list(struct(col("j"),
-        col("code_j")))), x => x.getField("code_j")).as("code"))
-    // per-query lookup tables: lut[j*ksub + cid] = dot(q_sub_j, cv)
-    // the query's own unit vector is NOT carried here: it would ride
-    // every (query, corpus-vector) row through the shortlist window's
-    // shuffle (~4·dim bytes against the ~30-byte ADC payload, a
-    // 10-15× exchange inflation on the operator's dominant pass). It
-    // is joined back from the tiny broadcast query side AFTER the
-    // ≤shortlist-per-query filter, where it's needed for the re-rank.
-    val luts = q.select(col("id").as("q_id"), subs.as("s"))
-      .select(col("q_id"), col("s.j"), col("s.sv"))
-      .join(broadcast(cbsub), "j")
-      .withColumn("lv", dot(col("sv"), col("cv")))
-      .groupBy(col("q_id"))
-      .agg(transform(sort_array(collect_list(struct(col("j"), col("cid"),
-        col("lv")))), x => x.getField("lv")).as("lut"))
-    // ADC scan over codes only (the memory-bound pass), j-ordered fold
-    val adcSim = aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-      (acc, j) => acc +
-        element_at(col("lut"), (j * nCb + element_at(col("code"), j + 1))
-          .cast("int") + 1))
-    val shortW = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").desc, col("n_id"))
-    val short = broadcast(luts).crossJoin(codes)
+    val q = unitVecs(queries, dim, idCol, vecCol)
+    val pq = pqCodebook(emb, m, dsub, ksub, "pqTopK")
+    // ADC over every code: the tiny broadcast LUT side × all codes
+    val cands = broadcast(pq.luts(q)).crossJoin(pq.encode(emb))
       .filter(col("q_id") =!= col("id"))
-      .select(col("q_id"), col("id").as("n_id"), adcSim.as("adc"))
-      .withColumn("sr", row_number().over(shortW))
-      .filter(col("sr") <= shortlist)
-    // exact re-rank of the shortlist on unit vectors; the query unit
-    // vector rejoins here (per-query-unique → identical values, but
-    // only ≤shortlist rows per query carry it instead of |C|)
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    val topk = short
-      .join(emb.select(col("id").as("n_id"), col("u").as("nu")), "n_id")
-      .join(broadcast(q.select(col("id").as("q_id"), col("u").as("qu"))),
-        "q_id")
-      .withColumn("sim", dot(col("qu"), col("nu")))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        col("sim"))
-    // same release discipline as Dedup.containmentPairs: materialize the
-    // (≤|Q|·k-row) result eagerly, then free the corpus-sized normalized
-    // cache and the codebook's checkpoint blocks HERE — a lazy return
-    // would leave a full corpus copy in executor storage for the rest of
-    // a catalog run (the checkpointed codebook additionally needs
-    // Checkpoints.release; Dataset.unpersist cannot reach its blocks).
-    // release=false keeps the return LAZY — for plan inspection
-    // (ExplainSpec pins the broadcast/codegen shape, which a
-    // checkpointed frame would hide behind Scan ExistingRDD) — and
-    // leaves emb/cb materialized for the caller to manage.
-    if (!release) topk
-    else {
-      val out = topk.localCheckpoint()
-      emb.unpersist(blocking = false)
-      graft.core.Checkpoints.release(cb)
-      out
-    }
+      .withColumnRenamed("id", "n_id")
+    finish(pq.search(cands, emb, q, k, math.max(k, shortlistFactor * k)),
+      release, cached = Seq(emb), checkpointed = Seq(pq.cb))
   }
 
   /** IVF×PQ ANN — the composed web-scale index shape (Jégou et al.
@@ -659,8 +767,9 @@ object Similarity {
     * Everything deterministic, composed from the two oracle-green
     * precedents: the coarse quantizer is [[ivfTopK]]'s fixed
     * `centroidEvery`-slice (here over UNIT vectors, so nearest-by-dot
-    * ≡ nearest-by-cosine), codebooks/encode/LUT/ADC/re-rank are
-    * [[pqTopK]]'s verbatim. Cell assignment is a partial-aggregatable
+    * ≡ nearest-by-cosine), codebooks/encode/LUT/ADC/re-rank are the
+    * same [[Pq]] stages as [[pqTopK]]. Cell assignment ([[unitCells]])
+    * is a partial-aggregatable
     * `min(struct(−dot, c_id))` — the encode pass's argmin discipline,
     * NOT a per-vector window sort: the corpus-side intermediate
     * (|corpus|·#centroids rows) collapses map-side before any
@@ -679,33 +788,11 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       release: Boolean = true): DataFrame = {
     val dim = vecDim(corpus, vecCol)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    val shortlist = math.max(k, shortlistFactor * k)
-    def unit(df: DataFrame): DataFrame =
-      normalized(df.filter(isIndexable(col(vecCol), dim)), vecCol)
-        .filter(col(s"${vecCol}_unit").isNotNull)
-        .select(col(idCol).as("id"), col(s"${vecCol}_unit").as("u"))
-    // consumed 4x (centroid slice, cell assignment, codebook, encode,
-    // re-rank join) — same cache rationale as pqTopK
-    val emb = spread(unit(corpus))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val q = unit(queries)
-    // coarse quantizer: fixed id-slice of the unit corpus (ivfTopK's
-    // deterministic stand-in for trained centroids), broadcast-sized
-    val cents = emb.filter(pmod(col("id"), lit(centroidEvery)) === 0)
-      .select(col("id").as("c_id"), col("u").as("cu"))
-      .localCheckpoint() // consumed 3x: cut the scan lineage once
-    // corpus→cell: argmax dot ≡ argmin (−dot) with c_id tie-break, as
-    // a map-side-combining min(struct). −1.0·x is exact in IEEE, so
-    // this is order-identical to the oracle's ORDER BY dot DESC, c_id
-    // (sub-ulp ties would need EQUAL doubles to diverge).
-    val cells = emb.crossJoin(broadcast(cents))
-      .withColumn("ns", lit(-1.0) * dot(col("u"), col("cu")))
-      .groupBy(col("id"))
-      .agg(min(struct(col("ns"), col("c_id"))).getField("c_id").as("c_id"))
-    // query→nProbe cells: same score, row_number over the tiny query
-    // side (a window over |Q|·#centroids rows, not a corpus pass)
+    val (emb, cents, pq) =
+      ivfPqIndex(corpus, dim, centroidEvery, m, ksub, idCol, vecCol)
+    val q = unitVecs(queries, dim, idCol, vecCol)
+    // query→nProbe cells: unitCells' score, row_number over the tiny
+    // query side (a window over |Q|·#centroids rows, not a corpus pass)
     val probeW = Window.partitionBy(col("q_id"))
       .orderBy(col("ns"), col("c_id"))
     val probes = q.select(col("id").as("q_id"), col("u").as("qu"))
@@ -714,76 +801,49 @@ object Similarity {
       .withColumn("pr", row_number().over(probeW))
       .filter(col("pr") <= nProbe)
       .select(col("q_id"), col("c_id"))
-    // PQ codebook/encode/LUT: pqTopK verbatim (see there for the
-    // argmin-d2 arithmetic and the dynamic-stride rationale)
-    val cbW = Window.orderBy(col("hk"), col("id"))
-    val cb = emb.withColumn("hk", Sampling.hashU31(col("id")))
-      .orderBy(col("hk"), col("id")).limit(ksub)
-      .withColumn("cid", row_number().over(cbW) - 1)
-      .localCheckpoint()
-    val nCb = cb.count().toInt
-    require(nCb > 0, "ivfPqTopK: no indexable vectors for a codebook")
-    val subs = explode(array((0 until m).map(j =>
-      struct(lit(j).as("j"),
-        slice(col("u"), j * dsub + 1, dsub).as("sv"))): _*))
-    val cbsub = cb.select(col("cid"), subs.as("s"))
-      .select(col("cid"), col("s.j"), col("s.sv").as("cv"),
-        dot(col("s.sv"), col("s.sv")).as("cn2"))
-    val d2 = col("cn2") - lit(2.0) * dot(col("sv"), col("cv"))
-    val codes = emb.select(col("id"), subs.as("s"))
-      .select(col("id"), col("s.j"), col("s.sv"))
-      .join(broadcast(cbsub), "j")
-      .withColumn("d2", d2)
-      .groupBy(col("id"), col("j"))
-      .agg(min(struct(col("d2"), col("cid"))).getField("cid").as("code_j"))
-      .groupBy(col("id"))
-      .agg(transform(sort_array(collect_list(struct(col("j"),
-        col("code_j")))), x => x.getField("code_j")).as("code"))
-    val luts = q.select(col("id").as("q_id"), subs.as("s"))
-      .select(col("q_id"), col("s.j"), col("s.sv"))
-      .join(broadcast(cbsub), "j")
-      .withColumn("lv", dot(col("sv"), col("cv")))
-      .groupBy(col("q_id"))
-      .agg(transform(sort_array(collect_list(struct(col("j"), col("cid"),
-        col("lv")))), x => x.getField("lv")).as("lut"))
     // THE composition point: the ADC scan reads only codes whose cell
     // some probe reaches — probes ⋈ cells is an equi-join on c_id, and
     // the (q_id, id) fan-out is |probed cells|·codes, not |Q|·|corpus|
-    val adcSim = aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-      (acc, j) => acc +
-        element_at(col("lut"), (j * nCb + element_at(col("code"), j + 1))
-          .cast("int") + 1))
-    val shortW = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").desc, col("n_id"))
-    val short = broadcast(probes)
-      .join(cells.select(col("id").as("n_id"), col("c_id")), "c_id")
+    val cands = broadcast(probes)
+      .join(unitCells(emb, cents).select(col("id").as("n_id"), col("c_id")),
+        "c_id")
       .filter(col("q_id") =!= col("n_id"))
-      .join(codes.select(col("id").as("n_id"), col("code")), "n_id")
-      .join(broadcast(luts), "q_id")
-      .select(col("q_id"), col("n_id"), adcSim.as("adc"))
-      .withColumn("sr", row_number().over(shortW))
-      .filter(col("sr") <= shortlist)
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("n_id"))
-    val topk = short
-      .join(emb.select(col("id").as("n_id"), col("u").as("nu")), "n_id")
-      .join(broadcast(q.select(col("id").as("q_id"), col("u").as("qu"))),
-        "q_id")
-      .withColumn("sim", dot(col("qu"), col("nu")))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank"),
-        col("sim"))
-    // release discipline: materialize the small result, then free the
-    // corpus cache and both checkpointed small frames (see pqTopK)
-    if (!release) topk
-    else {
-      val out = topk.localCheckpoint()
-      emb.unpersist(blocking = false)
-      graft.core.Checkpoints.release(cb)
-      graft.core.Checkpoints.release(cents)
-      out
-    }
+      .join(pq.encode(emb).select(col("id").as("n_id"), col("code")), "n_id")
+      .join(broadcast(pq.luts(q)), "q_id")
+    finish(pq.search(cands, emb, q, k, math.max(k, shortlistFactor * k)),
+      release, cached = Seq(emb), checkpointed = Seq(pq.cb, cents))
+  }
+
+  /** [[ivfPqTopK]]'s index stage: the spread unit corpus, cached (the
+    * centroid slice, cell assignment, codebook, encode and re-rank join
+    * all read it), its stride centroids and its PQ codebook. */
+  private def ivfPqIndex(corpus: DataFrame, dim: Int, centroidEvery: Int,
+      m: Int, ksub: Int, idCol: String,
+      vecCol: String): (DataFrame, DataFrame, Pq) = {
+    val dsub = subDim(dim, m)
+    val emb = spread(unitVecs(corpus, dim, idCol, vecCol))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cents = unitCentroids(emb, centroidEvery)
+    (emb, cents, pqCodebook(emb, m, dsub, ksub, "ivfPqTopK"))
+  }
+
+  /** The `(idCol, c_id, code)` rows an IVF×PQ index stores for the unit
+    * vectors `vecs`. */
+  private def ivfPqRows(vecs: DataFrame, cents: DataFrame, pq: Pq,
+      idCol: String): DataFrame =
+    unitCells(vecs, cents).join(pq.encode(vecs), "id")
+      .select(col("id").as(idCol), col("c_id"), col("code"))
+
+  /** The rows [[ivfPqTopK]]'s index stage stores for `corpus` —
+    * [[ivfPqEncodeBatch]] must append exactly these for a batch drawn
+    * from the same corpus (SimilaritySpec). */
+  private[graft] def ivfPqIndexRows(corpus: DataFrame,
+      centroidEvery: Int = 50, m: Int = 16, ksub: Int = 64,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val (emb, cents, pq) = ivfPqIndex(corpus, vecDim(corpus, vecCol),
+      centroidEvery, m, ksub, idCol, vecCol)
+    finish(ivfPqRows(emb, cents, pq, idCol), release = true,
+      cached = Seq(emb), checkpointed = Seq(cents, pq.cb))
   }
 
   /** INCREMENTAL IVF×PQ index maintenance — assign + PQ-encode a new
@@ -807,76 +867,34 @@ object Similarity {
     * (cell assignment vs broadcast centroids, subspace encode vs
     * broadcast codebook), each collapsing through a partial-aggregated
     * `min(struct)` argmin before any exchange. Nothing base-sized
-    * shuffles. Assignment/encode arithmetic is [[ivfPqTopK]]'s
-    * verbatim, so appended codes are bit-identical to what a full
-    * rebuild with the same quantizers would store. */
+    * shuffles. Assignment and encode are [[ivfPqTopK]]'s own stages
+    * ([[unitCells]], [[Pq.encode]]), so appended codes are
+    * bit-identical to what a full rebuild with the same quantizers
+    * would store. */
   def ivfPqEncodeBatch(batch: DataFrame, base: DataFrame,
       centroidEvery: Int = 50, m: Int = 16, ksub: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding",
       release: Boolean = true): DataFrame = {
     val dim = vecDim(base, vecCol)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    def unit(df: DataFrame): DataFrame =
-      normalized(df.filter(isIndexable(col(vecCol), dim)), vecCol)
-        .filter(col(s"${vecCol}_unit").isNotNull)
-        .select(col(idCol).as("id"), col(s"${vecCol}_unit").as("u"))
+    val dsub = subDim(dim, m)
     // frozen quantizers from the base corpus: two small derived
     // frames, checkpointed (cut the base-scan lineage once) and
     // broadcast below. The base itself is scanned twice, map-only.
-    val cents = unit(base)
-      .filter(pmod(col("id"), lit(centroidEvery)) === 0)
-      .select(col("id").as("c_id"), col("u").as("cu"))
-      .localCheckpoint()
-    val cbW = Window.orderBy(col("hk"), col("id"))
-    val cb = unit(base).withColumn("hk", Sampling.hashU31(col("id")))
-      .orderBy(col("hk"), col("id")).limit(ksub)
-      .withColumn("cid", row_number().over(cbW) - 1)
-      .localCheckpoint()
-    require(cb.count() > 0, "ivfPqEncodeBatch: empty base codebook")
-    // cb non-empty proves the base has indexable vectors, so an empty
-    // centroid slice means the stride missed every base id — the
-    // crossJoin below would be empty and the append SILENTLY empty
-    // (the semDedup stride guard, mirrored; the cb require above
-    // can't catch this: the codebook sample is stride-independent)
-    if (cents.isEmpty)
-      throw new IllegalArgumentException(
-        "ivfPqEncodeBatch: no base id is divisible by centroidEvery=" +
-          s"$centroidEvery — the batch would assign to zero cells and " +
-          "the append would be silently empty; pick a stride that " +
-          "intersects the base id space")
-    val subs = explode(array((0 until m).map(j =>
-      struct(lit(j).as("j"),
-        slice(col("u"), j * dsub + 1, dsub).as("sv"))): _*))
-    val cbsub = cb.select(col("cid"), subs.as("s"))
-      .select(col("cid"), col("s.j"), col("s.sv").as("cv"),
-        dot(col("s.sv"), col("s.sv")).as("cn2"))
+    val cents = unitCentroids(unitVecs(base, dim, idCol, vecCol),
+      centroidEvery)
+    val pq = pqCodebook(unitVecs(base, dim, idCol, vecCol), m, dsub, ksub,
+      "ivfPqEncodeBatch")
+    // the codebook sample is stride-independent, so it cannot catch a
+    // stride that misses every base id (the semDedup guard, mirrored)
+    requireStrideHits(cents, pq.cb,
+      "ivfPqEncodeBatch: no base id is divisible by centroidEvery=" +
+        s"$centroidEvery — the batch would assign to zero cells and " +
+        "the append would be silently empty; pick a stride that " +
+        "intersects the base id space")
     // the batch's two map-shaped passes (normalize is map-only; both
     // argmins partial-aggregate below their shuffle)
-    val batchU = unit(batch)
-    val cells = batchU.crossJoin(broadcast(cents))
-      .withColumn("ns", lit(-1.0) * dot(col("u"), col("cu")))
-      .groupBy(col("id"))
-      .agg(min(struct(col("ns"), col("c_id"))).getField("c_id").as("c_id"))
-    val d2 = col("cn2") - lit(2.0) * dot(col("sv"), col("cv"))
-    val codes = batchU.select(col("id"), subs.as("s"))
-      .select(col("id"), col("s.j"), col("s.sv"))
-      .join(broadcast(cbsub), "j")
-      .withColumn("d2", d2)
-      .groupBy(col("id"), col("j"))
-      .agg(min(struct(col("d2"), col("cid"))).getField("cid").as("code_j"))
-      .groupBy(col("id"))
-      .agg(transform(sort_array(collect_list(struct(col("j"),
-        col("code_j")))), x => x.getField("code_j")).as("code"))
-    val out = cells.join(codes, "id")
-      .select(col("id").as(idCol), col("c_id"), col("code"))
-    if (!release) out
-    else {
-      val o = out.localCheckpoint()
-      graft.core.Checkpoints.release(cents)
-      graft.core.Checkpoints.release(cb)
-      o
-    }
+    finish(ivfPqRows(unitVecs(batch, dim, idCol, vecCol), cents, pq, idCol),
+      release, cached = Nil, checkpointed = Seq(cents, pq.cb))
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv 2303.09540, public): semantic
@@ -944,38 +962,19 @@ object Similarity {
       s"threshold must be in (0, 1], got $threshold")
     val dim = vecDim(corpus, vecCol)
     val c = spread(corpus).filter(isIndexable(col(vecCol), dim))
-    // the semDedupPairs stride-guard stance, lifted to the explicit
-    // frame: an empty centroid set (an empty kmeans input, a
-    // mis-filtered frame) would yield zero cells → zero pairs → a
-    // dedup that silently KEEPS EVERY DUPLICATE
-    if (centroids.isEmpty && !c.isEmpty)
-      throw new IllegalArgumentException(
-        "semDedupWithCentroids: empty centroid frame — every vector " +
-          "would silently survive; pass a non-empty (c_id, cu) frame")
-    val vecs = c.select(col(idCol).as("m_id"), col(vecCol).as("m_vec"),
-      norm(col(vecCol)).as("m_norm"))
+    // the semDedupPairs stride guard, lifted to the explicit frame (an
+    // empty kmeans input, a mis-filtered frame)
+    requireStrideHits(centroids, c,
+      "semDedupWithCentroids: empty centroid frame — every vector " +
+        "would silently survive; pass a non-empty (c_id, cu) frame")
+    val vecs = side(c, "m", idCol, vecCol)
     // cu is unit, so cos(v, cu) = dot(v, cu)/|v| — one division saved
-    val assigned = vecs
-      .crossJoin(broadcast(centroids.select(col("c_id"), col("cu"))))
-      .select(col("m_id"),
-        (lit(-1.0) * (dot(col("m_vec"), col("cu")) / col("m_norm")))
-          .as("ns"),
-        col("c_id"))
-      .groupBy(col("m_id"))
-      .agg(min(struct(col("ns"), col("c_id"))).getField("c_id")
-        .as("c_id"))
+    val assigned = nearestCell(
+      vecs.crossJoin(broadcast(centroids.select(col("c_id"), col("cu")))),
+      "m_id", dot(col("m_vec"), col("cu")) / col("m_norm"))
     val cells = vecs.join(assigned, "m_id").localCheckpoint()
-    val x = cells.select(col("c_id"), col("m_id").as("a_id"),
-      col("m_vec").as("va"), col("m_norm").as("na"))
-    val y = cells.select(col("c_id"), col("m_id").as("b_id"),
-      col("m_vec").as("vb"), col("m_norm").as("nb"))
-    val pairs = x.join(y, Seq("c_id")).filter(col("a_id") < col("b_id"))
-      .withColumn("sim",
-        dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(col("sim") >= threshold)
-      .select("a_id", "b_id")
-      .localCheckpoint()
-    graft.core.Checkpoints.release(cells)
+    val pairs = finish(cellPairs(cells, threshold), release = true,
+      cached = Nil, checkpointed = Seq(cells))
     Dedup.representatives(corpus, pairs, idCol)
   }
 
@@ -1039,55 +1038,47 @@ object Similarity {
     require(centProbe >= 1, s"centProbe must be >= 1, got $centProbe")
     val dim = vecDim(corpus, vecCol)
     val c = spread(corpus).filter(isIndexable(col(vecCol), dim))
-    val centroids0 = c
-      .filter(pmod(col(idCol), lit(centroidEvery)) === 0)
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
-        norm(col(vecCol)).as("c_norm"))
+    val flat = superFactor == 0
+    val centroids0 = side(strideSlice(c, idCol, centroidEvery), "c", idCol,
+      vecCol)
     // hierarchical path consumes centroids once (the routing cross);
     // only the flat path's double consumption needs the checkpoint
-    val centroids = if (checkpoint && superFactor == 0)
+    val centroids = if (checkpoint && flat)
       centroids0.localCheckpoint() else centroids0
-    // a corpus whose id space contains NO multiple of centroidEvery
-    // (odd-only ids with an even stride, re-keyed ids, …) would yield
-    // zero centroids → zero cells → zero pairs → a dedup that silently
-    // KEEPS EVERY DUPLICATE. Fail loudly instead (the exactQuantiles
-    // guard stance); an empty corpus legitimately returns empty. The
-    // probe is two limit-1 scans on the production path only — the
+    // an id space with NO multiple of centroidEvery (odd-only ids with
+    // an even stride, re-keyed ids, …) would silently keep every
+    // duplicate. Probed on the production path only — the
     // plan-inspection path (checkpoint=false) must stay action-free.
-    if (checkpoint && centroids.isEmpty && !c.isEmpty)
-      throw new IllegalArgumentException(
+    if (checkpoint)
+      requireStrideHits(centroids, c,
         s"semDedup: no corpus id is divisible by centroidEvery=" +
           s"$centroidEvery — every vector would silently survive; pick " +
           "a stride that intersects the id space")
-    val vecs = c.select(col(idCol).as("m_id"), col(vecCol).as("m_vec"),
-      norm(col(vecCol)).as("m_norm"))
-    // checkpointed frames created inside the assignment branch (the
-    // super slice) that the tail must release alongside cells/centroids
-    val branchCk = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val cells0 =
-      if (superFactor == 0) {
+    val vecs = side(c, "m", idCol, vecCol)
+    // (cells, checkpointed frames the tail must release with them)
+    val (cells0, ownCk) =
+      if (flat) {
         // flat assignment: corpus × broadcast(centroids) — the spec
         // baseline; see the scaladoc for why production routes instead
-        vecs.crossJoin(broadcast(centroids))
-          .withColumn("ns", lit(-1.0) * (dot(col("m_vec"), col("c_vec")) /
-            (col("m_norm") * col("c_norm"))))
+        (vecs.crossJoin(broadcast(centroids))
+          .withColumn("ns", lit(-1.0) * sideCos("m", "c"))
           .groupBy(col("m_id"))
           // m_vec/m_norm are constant within the group (keyed by m_id);
-          // first() just carries them through the partial agg
+          // first() just carries them through the partial agg — a
+          // different plan from nearestCell's skinny projection
           .agg(first(col("m_vec")).as("m_vec"),
             first(col("m_norm")).as("m_norm"),
-            min(struct(col("ns"), col("c_id"))).getField("c_id").as("c_id"))
+            min(struct(col("ns"), col("c_id"))).getField("c_id").as("c_id")),
+          Seq(centroids))
       } else {
         val superStride = centroidEvery.toLong * superFactor
-        val sups0 = c.filter(pmod(col(idCol), lit(superStride)) === 0)
-          .select(col(idCol).as("s_id"), col(vecCol).as("s_vec"),
-            norm(col(vecCol)).as("s_norm"))
+        val sups0 = side(strideSlice(c, idCol, superStride), "s", idCol,
+          vecCol)
         val sups = if (checkpoint) sups0.localCheckpoint() else sups0
-        if (checkpoint) branchCk += sups
         // same silent-keep-all failure mode one level up: centroids
         // exist but the super stride misses every one of them
-        if (checkpoint && sups.isEmpty && !centroids.isEmpty)
-          throw new IllegalArgumentException(
+        if (checkpoint)
+          requireStrideHits(sups, centroids,
             "semDedup: no centroid id is divisible by superStride=" +
               s"$superStride (centroidEvery=$centroidEvery × superFactor=" +
               s"$superFactor) — every vector would silently survive; " +
@@ -1104,62 +1095,29 @@ object Similarity {
         val crW = Window.partitionBy(col("c_id"))
           .orderBy(col("ns"), col("s_id"))
         val centroute = centroids.crossJoin(broadcast(sups))
-          .withColumn("ns", lit(-1.0) * (dot(col("c_vec"), col("s_vec")) /
-            (col("c_norm") * col("s_norm"))))
+          .withColumn("ns", lit(-1.0) * sideCos("c", "s"))
           .withColumn("rnk", row_number().over(crW))
           .filter(col("rnk") <= centProbe)
           .select(col("s_id"), col("c_id"), col("c_vec"), col("c_norm"))
-        // vector → single nearest super: SKINNY argmin — the dot is
-        // projected to (m_id, ns, s_id) BEFORE the aggregate so the
-        // vectors never ride the crossJoin output or the agg buffer
-        // (a first(m_vec) formulation is array-payload churn through
-        // the partial aggregate, measured 11× superlinear on the
-        // kmeans ramp — SCALE.md round-12; vectors re-attach by an id
-        // equi-join where actually needed). n·∜n compute, n skinny
-        // rows shuffled.
-        val vroute = vecs.crossJoin(broadcast(sups))
-          .select(col("m_id"),
-            (lit(-1.0) * (dot(col("m_vec"), col("s_vec")) /
-              (col("m_norm") * col("s_norm")))).as("ns"),
-            col("s_id"))
-          .groupBy(col("m_id"))
-          .agg(min(struct(col("ns"), col("s_id"))).getField("s_id")
-            .as("s_id"))
+        // vector → single nearest super: n·∜n compute, n skinny rows
+        // shuffled
+        val vroute = nearestCell(vecs.crossJoin(broadcast(sups)), "m_id",
+          sideCos("m", "s"), "s_id")
         // candidate scan: re-attach vectors by id, EQUI-join on s_id
         // (not broadcast — the centroid side is the √n-growth frame),
-        // skinny argmin over the routed super-cell's centroids only,
-        // then one final id join builds the (id, vec, cell) frame the
-        // pair stage consumes
-        val assigned = vecs.join(vroute, "m_id")
-          .join(centroute, "s_id")
-          .select(col("m_id"),
-            (lit(-1.0) * (dot(col("m_vec"), col("c_vec")) /
-              (col("m_norm") * col("c_norm")))).as("ns"),
-            col("c_id"))
-          .groupBy(col("m_id"))
-          .agg(min(struct(col("ns"), col("c_id"))).getField("c_id")
-            .as("c_id"))
-        vecs.join(assigned, "m_id")
-          .select(col("m_id"), col("m_vec"), col("m_norm"), col("c_id"))
+        // argmin over the routed super-cell's centroids only, then one
+        // final id join builds the (id, vec, cell) frame the pair stage
+        // consumes
+        val assigned = nearestCell(
+          vecs.join(vroute, "m_id").join(centroute, "s_id"), "m_id",
+          sideCos("m", "c"))
+        (vecs.join(assigned, "m_id")
+          .select(col("m_id"), col("m_vec"), col("m_norm"), col("c_id")),
+          Seq(sups))
       }
     val cells = if (checkpoint) cells0.localCheckpoint() else cells0
-    val x = cells.select(col("c_id"), col("m_id").as("a_id"),
-      col("m_vec").as("va"), col("m_norm").as("na"))
-    val y = cells.select(col("c_id"), col("m_id").as("b_id"),
-      col("m_vec").as("vb"), col("m_norm").as("nb"))
-    val pairs = x.join(y, Seq("c_id")).filter(col("a_id") < col("b_id"))
-      .withColumn("sim", dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(col("sim") >= threshold)
-      .select("a_id", "b_id")
-    if (!checkpoint) pairs
-    else {
-      val p = pairs.localCheckpoint()
-      graft.core.Checkpoints.release(cells)
-      // no-op on the hierarchical path (centroids stay lazy there)
-      graft.core.Checkpoints.release(centroids)
-      branchCk.foreach(graft.core.Checkpoints.release)
-      p
-    }
+    finish(cellPairs(cells, threshold), checkpoint, cached = Nil,
+      checkpointed = cells +: ownCk)
   }
 
   /** Deterministic SPHERICAL k-means (Lloyd's algorithm over unit
@@ -1184,8 +1142,8 @@ object Similarity {
     * centroid; a zero-norm mean (exact cancellation) likewise.
     *
     * Scale shape per round: one broadcast-centroid argmin over the
-    * corpus (the [[ivfPqEncodeBatch]] assignment shape — partial-
-    * aggregated below its exchange) plus one (c_id, pos)-keyed
+    * corpus ([[nearestCell]] — partial-aggregated below its
+    * exchange) plus one (c_id, pos)-keyed
     * integer-sum aggregate whose shuffle is #centroids·dim rows.
     * Centroid count is a build-time budget (the FAISS nlist
     * contract): hold it fixed as the corpus grows and every round
@@ -1196,31 +1154,16 @@ object Similarity {
     require(iters >= 0 && iters <= 8,
       s"iters must be in [0, 8] (each round is a corpus pass), got $iters")
     val dim = vecDim(corpus, vecCol)
-    val base = normalized(
-        spread(corpus).filter(isIndexable(col(vecCol), dim)), vecCol)
-      .filter(col(s"${vecCol}_unit").isNotNull)
-      .select(col(idCol).as("id"), col(s"${vecCol}_unit").as("u"))
-      .localCheckpoint()
-    var cents = base.filter(pmod(col("id"), lit(seedEvery)) === 0)
-      .select(col("id").as("c_id"), col("u").as("cu"))
-      .localCheckpoint()
-    if (cents.isEmpty && !base.isEmpty)
-      throw new IllegalArgumentException(
-        "kmeansCentroids: no indexable id is divisible by seedEvery=" +
-          s"$seedEvery — pick a stride that intersects the id space")
+    val base = unitVecs(spread(corpus), dim, idCol, vecCol).localCheckpoint()
+    var cents = unitCentroids(base, seedEvery)
+    requireStrideHits(cents, base,
+      "kmeansCentroids: no indexable id is divisible by seedEvery=" +
+        s"$seedEvery — pick a stride that intersects the id space")
     for (_ <- 0 until iters) {
-      // skinny argmin: project (id, ns, c_id) BEFORE the aggregate so
-      // the 64-double vectors never ride the crossJoin output or the
-      // agg buffer (a first(u) formulation measured 1.2-superlinear
-      // at the 64× ramp cell — array-payload churn through the
-      // partial aggregate; the ivfPqEncodeBatch shape ramps 0.96),
-      // then re-attach u by an id equi-join for the update stage
-      val cells = base.crossJoin(broadcast(cents))
-        .select(col("id"),
-          (lit(-1.0) * dot(col("u"), col("cu"))).as("ns"), col("c_id"))
-        .groupBy(col("id"))
-        .agg(min(struct(col("ns"), col("c_id"))).getField("c_id")
-          .as("c_id"))
+      // skinny argmin, then re-attach u by an id equi-join for the
+      // update stage
+      val cells = nearestCell(base.crossJoin(broadcast(cents)), "id",
+        dot(col("u"), col("cu")))
       val assign = base.join(cells, "id")
       val sums = assign.select(col("c_id"), posexplode(col("u")))
         .select(col("c_id"), col("pos"),
@@ -1249,11 +1192,6 @@ object Similarity {
     cents
   }
 
-  /** Unit-normalize the vector column into `<vecCol>_unit`
-    * (array<double>). The norm is projected ONCE per row before the
-    * per-element division — inlining `norm()` inside the transform
-    * lambda would re-run the O(d) fold for every element (O(d²)/row).
-    * Zero-norm and null vectors normalize to null: no direction. */
   /** Chunk→document embedding MEAN-POOLING, fixed-point exact — the
     * aggregation step after a long document is embedded chunk-wise
     * (the public sentence-transformers recipe). A double mean would
@@ -1282,6 +1220,11 @@ object Similarity {
           .cast("long"))
   }
 
+  /** Unit-normalize the vector column into `<vecCol>_unit`
+    * (array<double>). The norm is projected ONCE per row before the
+    * per-element division — inlining `norm()` inside the transform
+    * lambda would re-run the O(d) fold for every element (O(d²)/row).
+    * Zero-norm and null vectors normalize to null: no direction. */
   def normalized(df: DataFrame, vecCol: String): DataFrame =
     df.withColumn("__nrm", norm(col(vecCol)))
       .withColumn(s"${vecCol}_unit",
@@ -1344,18 +1287,9 @@ object Similarity {
     val spark = df.sparkSession
     import spark.implicits._
     val dim = vecDim(df, vecCol)
-    val pts = normalized(df.filter(isIndexable(col(vecCol), dim)), vecCol)
-      .filter(col(s"${vecCol}_unit").isNotNull)
-      .select(col(idCol).cast("long").as("id"),
-        quantizeInt8(col(s"${vecCol}_unit")).as("v8"))
+    val pts = unitVecs(df, dim, idCol, vecCol, _.cast("long").as("id"),
+        quantizeInt8(_).as("v8"))
       .localCheckpoint()
-    // integer-exact squared L2 to one literal center: per-element
-    // (x−y)² ≤ 254² fits int, the running sum is long
-    def d2To(center: Seq[Int]): Column =
-      aggregate(
-        zip_with(col("v8"), array(center.map(lit): _*),
-          (x, y) => (x - y) * (x - y)),
-        lit(0L), (acc, e) => acc + e.cast("long"))
     val seed = pts.orderBy(col("id")).limit(1).collect()
     require(seed.nonEmpty, "kCenterSelect: no indexable vectors")
     var centerVec = seed(0).getSeq[Int](1)
@@ -1365,7 +1299,7 @@ object Similarity {
     // previous round's blocks by its own LogicalRDD leaf (never a
     // registry diff, which could claim a concurrent job's RDDs)
     val rotate = new graft.core.Checkpoints.Rotating
-    var cur = pts.withColumn("md", d2To(centerVec))
+    var cur = pts.withColumn("md", int8D2(col("v8"), centerVec))
     var round = 2
     var done = false
     while (round <= k && !done) {
@@ -1375,7 +1309,8 @@ object Similarity {
       else {
         sel += ((nxt(0).getLong(0), round.toLong, nxt(0).getLong(2)))
         centerVec = nxt(0).getSeq[Int](1)
-        cur = cur.withColumn("md", least(col("md"), d2To(centerVec)))
+        cur = cur.withColumn("md",
+          least(col("md"), int8D2(col("v8"), centerVec)))
         round += 1
       }
     }
@@ -1408,10 +1343,8 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val dim = vecDim(df, vecCol)
     def q8(d: DataFrame): DataFrame =
-      normalized(d.filter(isIndexable(col(vecCol), dim)), vecCol)
-        .filter(col(s"${vecCol}_unit").isNotNull)
-        .select(col(idCol).cast("long").as("__pid"),
-          quantizeInt8(col(s"${vecCol}_unit")).as("__v8"))
+      unitVecs(d, dim, idCol, vecCol, _.cast("long").as("__pid"),
+        quantizeInt8(_).as("__v8"))
     // bounded: one row per selected center
     val cents = q8(df)
       .join(selected.select(col(idCol).cast("long").as("__cid"),
@@ -1423,16 +1356,11 @@ object Similarity {
       .sortBy(_._2) // round-ascending, so strict '<' keeps the
                     // earliest round on distance ties
     require(cents.nonEmpty, "kCenterAssign: empty center set")
-    def d2To(v: Seq[Int]): Column =
-      aggregate(
-        zip_with(col("__v8"), array(v.map(lit): _*),
-          (x, y) => (x - y) * (x - y)),
-        lit(0L), (acc, e) => acc + e.cast("long"))
-    var bestD2 = d2To(cents.head._3)
+    var bestD2 = int8D2(col("__v8"), cents.head._3)
     var bestCid: Column = lit(cents.head._1)
     var bestRnd: Column = lit(cents.head._2)
     cents.tail.foreach { case (cid, rnd, v) =>
-      val d = d2To(v)
+      val d = int8D2(col("__v8"), v)
       val better = d < bestD2
       bestCid = when(better, lit(cid)).otherwise(bestCid)
       bestRnd = when(better, lit(rnd)).otherwise(bestRnd)

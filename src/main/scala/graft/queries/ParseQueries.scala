@@ -1,5 +1,6 @@
 package graft.queries
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.abi.Keccak256
@@ -9,17 +10,32 @@ import graft.parse.{ContractCatalog, ParseRunner}
 import graft.sources.EvmFixtures
 
 /** Corpus-wide parse stage (SURVEY §2.9/§3.2 + `parser.py:64-117`):
-  * the catalog walks the REFERENCE'S OWN contract corpus (read as input
-  * data, as the reference DAG does), enumerates one [[graft.parse
-  * .ParseTask]] per ABI element, and the oracled query below runs a
-  * two-contract slice — erc20 Transfer (no contract_address → decode
-  * every topic0 match) and CryptoPunks PunkBought (address-filtered,
-  * 3 indexed topics + data) — over fixture logs whose expected decoded
-  * values DuckDB recomputes from lineitem directly.
+  * a contract catalog enumerates one [[graft.parse.ParseTask]] per ABI
+  * element, and the oracled queries below run a two-contract slice —
+  * erc20 Transfer (no contract_address → decode every topic0 match) and
+  * CryptoPunks PunkBought (address-filtered, 3 indexed topics + data) —
+  * over fixture logs whose expected decoded values DuckDB recomputes
+  * from lineitem directly.
   */
 object ParseQueries extends QueryGroup {
 
+  /** The reference's full contract corpus (read as input data, as the
+    * reference DAG does) — only the full-corpus specs and ScaleRamp
+    * walk it, and they skip when it is absent. */
   val CorpusDir = "/root/reference/dags/resources/contracts/ethereum"
+
+  /** The slice's two contracts, shipped as classpath resources in the
+    * corpus layout (`contracts/ethereum/<dataset>/<contract>.json`): the
+    * public erc20 Transfer/Approval events and CryptoPunksMarket's
+    * PunkBought with its mainnet address. The catalog queries need no
+    * external corpus. */
+  def sliceCatalog: ContractCatalog = ContractCatalog.inMemory(
+    Seq("common/erc20.json", "cryptopunks/CryptoPunksMarket.json").map { f =>
+      val in = getClass.getResourceAsStream(s"/contracts/ethereum/$f")
+      require(in != null, s"ABI resource contracts/ethereum/$f missing")
+      try new String(in.readAllBytes(), UTF_8)
+      finally in.close()
+    })
 
   private def pad64(c: org.apache.spark.sql.Column) =
     concat(lit("0x"), lpad(lower(hex(c)), 64, "0"))
@@ -44,7 +60,7 @@ object ParseQueries extends QueryGroup {
                 (l_orderkey % 10000) || ':' || l_partkey,
                 '0xt' || l_orderkey || '_' || l_linenumber
          FROM li WHERE l_linenumber % 3 = 1""") { (spark, dir) =>
-      val tasks = ParseRunner.tasks(ContractCatalog.fromDirectory(CorpusDir))
+      val tasks = ParseRunner.tasks(sliceCatalog)
       val transfer =
         tasks.find(_.tableName == "common.erc20_evt_Transfer").get
       val punkBought = tasks
@@ -133,7 +149,7 @@ object ParseQueries extends QueryGroup {
     * the intermediate plans. */
   def lifecycle(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val tasks = ParseRunner.tasks(ContractCatalog.fromDirectory(CorpusDir))
+    val tasks = ParseRunner.tasks(sliceCatalog)
     val transfer = tasks.find(_.tableName == "common.erc20_evt_Transfer").get
     val noiseTopic = Keccak256.eventTopic("Approval(address,address,uint256)")
 
@@ -183,7 +199,7 @@ object ParseQueries extends QueryGroup {
     // hand-off between stages is the parquet layout itself
     val whLogs = spark.read.parquet(s"$wh/logs")
     val parseWh = tmpDir("graft_lc_parse")
-    ParseRunner.run(spark, ContractCatalog.fromDirectory(CorpusDir),
+    ParseRunner.run(spark, sliceCatalog,
       whLogs, whLogs.limit(0), parseWh,
       t => t.tableName == transfer.tableName)
     spark.read.parquet(s"$parseWh/common/common_erc20_evt_Transfer")

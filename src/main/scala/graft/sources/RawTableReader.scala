@@ -26,10 +26,4 @@ object RawTableReader {
       .schema(RawSchemas.prices)
       .option("header", "true")
       .csv(path)
-
-  /** Raw S3 layout: export/{chain}/{task}/block_date={ds}/{task}.{ext}
-    * (`/root/reference/dags/chains/loader.py:161-165`). */
-  def rawPath(root: String, chain: String, task: String, ds: String,
-              ext: String): String =
-    s"$root/export/$chain/$task/block_date=$ds/$task.$ext"
 }

@@ -754,14 +754,6 @@ private[streaming] object StreamRun {
     }
   }
 
-  /** Convenience for pipelines that prefilter with a Column predicate. */
-  def boundedFiltered(spark: SparkSession, path: String,
-      read: (SparkSession, String) => DataFrame, keep: Column,
-      pipeline: DataFrame => DataFrame)(
-      sink: DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row]): Unit =
-    bounded(spark, path, read, df => pipeline(df.filter(keep)))(sink)
-
   /** Bounded foreachBatch drain over a parquet file-stream directory —
     * the shared scaffolding for the evolving-state ingest loops
     * (near-dup, profile): same shuffle-partition discipline as

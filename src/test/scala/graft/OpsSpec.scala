@@ -481,6 +481,23 @@ class SimilaritySpec extends AnyFunSuite {
     assert(ex.getMessage.contains("centroidEvery"))
   }
 
+  test("ivfPqEncodeBatch appends exactly the rows the ivfPqTopK index " +
+      "stores for the same ids") {
+    // the append path derives its quantizers from unit(base), the index
+    // path from spread(unit(corpus)); both must yield the same cells and
+    // codes, or appended rows drift from a full rebuild
+    val emb = Tables.df(spark, sf, "embeddings")
+    val base = emb.filter(col("vec_id") % 7 =!= 3)
+    val batch = base.filter(col("vec_id") % 5 === 1)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2).toList)).toSet
+    val appended = rows(Similarity.ivfPqEncodeBatch(batch, base))
+    val ids = batch.select("vec_id").collect().map(_.getLong(0)).toSet
+    val stored = rows(Similarity.ivfPqIndexRows(base)).filter(r => ids(r._1))
+    assert(appended.nonEmpty)
+    assert(appended == stored)
+  }
+
   test("kmeans: each Lloyd round does not increase the spherical " +
       "objective, centroids stay unit, stride guard fires") {
     val emb = Tables.df(spark, sf, "embeddings")

@@ -280,13 +280,22 @@ class AbiCorpusSpec extends AnyFunSuite {
     assert(files.length >= 30 && events >= 140 && functions >= 450)
   }
 
-  test("known corpus topics: erc20 Transfer + seaport OrderFulfilled") {
-    val erc20 = AbiJson.parseContract(Files.readString(
-      new java.io.File(root, "common/erc20.json").toPath))
+  test("known corpus topics: erc20 Transfer + CryptoPunks PunkBought") {
+    // the in-repo ABI resources the parse catalog queries decode with
+    val contracts = graft.queries.ParseQueries.sliceCatalog.contractJsons
+      .map(AbiJson.parseContract)
+    val erc20 = contracts.find(_.contractName == "erc20").get
     assert(erc20.contractAddress.isEmpty) // decode-all semantics
     val transfer = erc20.events.find(_.name == "Transfer").get
     assert(transfer.topic0 ==
       "0xddf252ad1be2c89b69c2b068fc378daa952ba7f163c4a11628f55a4df523b3ef")
+    val punks = contracts.find(_.contractName == "CryptoPunksMarket").get
+    assert(punks.datasetName == "cryptopunks")
+    assert(punks.contractAddress.map(_.toLowerCase) ==
+      Some("0xb47e3cd837ddf8e4c57f05d70ab865de6e193bbb"))
+    val bought = punks.events.find(_.name == "PunkBought").get
+    assert(bought.topic0 == graft.abi.Keccak256.eventTopic(
+      "PunkBought(uint256,uint256,address,address)"))
   }
 }
 

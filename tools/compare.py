@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
-"""Local mirror of the driver's correctness gate: for each query output
-parquet written by graft.Verify, run the corresponding oracle SQL in
-DuckDB over the same testdata tables and diff the results.
+"""Local correctness gate: for each query in the oracle_sql.json
+written by graft.Verify, run its oracle SQL in DuckDB over the same
+testdata tables and diff the result against the query's output
+parquet. A query with no output directory counts as a fail.
 
 Two layers, both must pass:
  1. semantic: pandas exact-value compare with dtype coercion;
@@ -41,9 +42,13 @@ def main(sf_dir, out_dir):
         oracles = json.load(f)
 
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    # every oracled query must have written its output: a query that
+    # failed in graft.Verify leaves no directory and counts as a fail
+    for name in sorted(oracles):
         qdir = os.path.join(out_dir, name)
         if not os.path.isdir(qdir):
+            print(f"[FAIL missing] {name}: no output directory")
+            n_fail += 1
             continue
         parts = sorted(glob.glob(f"{qdir}/*.parquet"))
         # legitimately-empty result under AQE: zero part files. Take the
@@ -53,10 +58,6 @@ def main(sf_dir, out_dir):
         got = (pd.concat([pd.read_parquet(p) for p in parts],
                          ignore_index=True)
                if parts else None)
-        if name not in oracles:
-            print(f"[rows-only] {name}: "
-                  f"{0 if got is None else len(got)} rows")
-            continue
         try:
             want = con.execute(oracles[name]).df()
         except Exception as e:
