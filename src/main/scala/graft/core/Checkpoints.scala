@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Eager release of localCheckpoint'd frames.
@@ -24,10 +24,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * will read again. */
 object Checkpoints {
   def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    rddsOf(df).foreach(_.unpersist(blocking = false))
+
+  /** The checkpointed RDDs `ds`'s analyzed plan reads. */
+  def rddsOf(ds: Dataset[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+    ds.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
 
   /** Rotating checkpoint for iterative loops (PageRank, greedy
     * k-center): each call materializes the new round's frame and frees
@@ -43,12 +44,16 @@ object Checkpoints {
     * frame. */
   final class Rotating {
     private var prev: Option[DataFrame] = None
-    def apply(df: DataFrame): DataFrame = {
-      val cp = df.localCheckpoint()
+    def apply(df: DataFrame): DataFrame = adopt(df.localCheckpoint())
+    /** Take an already materialized checkpoint `cp` as the current
+      * round (a seed checkpointed before the loop's scope opened): the
+      * next rotation frees it. */
+    def adopt(cp: DataFrame): DataFrame = {
       prev.foreach(release)
       prev = Some(cp)
       cp
     }
+    def last: Option[DataFrame] = prev
     def releaseLast(): Unit = { prev.foreach(release); prev = None }
   }
 }

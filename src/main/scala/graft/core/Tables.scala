@@ -98,74 +98,6 @@ object GraftSession {
     spark
   }
 
-  /** Run `body` with AQE disabled, restoring the previous setting after.
-    *
-    * For ITERATIVE operators whose per-round plan shape is static and
-    * known (PageRank/TrustRank/HITS power steps, k-core peel,
-    * connected-components pointer jumps): AQE materializes every
-    * shuffle stage as its own job to re-plan between stages, so a
-    * round with S exchanges costs S+1 driver job cycles instead of 1 —
-    * measured 51 jobs for 8 PageRank rounds at sf0.1, with the
-    * between-job driver floor (not task work) dominating wall time.
-    * A loop's shape never changes between rounds, so there is nothing
-    * for AQE to adapt: with co-partitioned loop invariants (see
-    * [[graft.ops.Graph]]) each round is ONE job however many stages it
-    * has. At cluster scale the trade reads the same — the per-job
-    * floor is driver RPC × executors, and it multiplies by the round
-    * count; skew belongs to the one-time PREP joins, which callers may
-    * keep outside the scope. Loop-invariant frames checkpointed inside
-    * the scope also keep their exact hash partitioning (no AQE
-    * coalescing), which is what lets every round's joins line up
-    * exchange-free. */
-  def withStaticPlan[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Loop-sized shuffle partition count off a KNOWN row count: ~4M
-    * rows (~100-200 MB of long-tuple rows) per task. At test scale
-    * this is 1 — a round's whole state fits one task and the
-    * per-task/per-file floors vanish; at 10¹¹ rows it is tens of
-    * thousands — the same number AQE would coalesce to, decided ONCE
-    * instead of re-planned (at one driver job per exchange) per round. */
-  def loopPartitionsOf(maxRows: Long): Int =
-    math.min(math.max(1L, (maxRows + 3999999L) / 4000000L), 65536L).toInt
-
-  /** [[withStaticPlan]] plus a loop-sized shuffle partition count and
-    * no broadcast joins: the iterative caller has already COUNTED its
-    * loop-invariant frames, so the right post-shuffle partition count
-    * is a one-time function of known cardinality instead of AQE's
-    * per-stage re-plan (which costs one driver job per exchange per
-    * round). Broadcast is off inside the scope because loop state is
-    * |V|-sized — never broadcastable at corpus scale — and at test
-    * scale each round's broadcast build is an extra driver job plus a
-    * ~1 MB task-binary serialization per stage (measured); the
-    * shuffle-join plan with p-sized exchanges is both the plan that
-    * survives 100× and, under the static planner, lets a whole
-    * checkpoint interval run as ONE job however many stages deep.
-    *
-    * `allowBroadcast = true` (the default) keeps size-based broadcast
-    * planning: loop state frames are local CHECKPOINTS, whose stats
-    * are their actual materialized bytes, so the planner broadcasts
-    * exactly when the state really is small and switches itself to
-    * the shuffle join at scale — adaptivity at the right granularity
-    * (per loop, off real sizes) rather than AQE's per-stage jobs.
-    * Pass false for loops whose state estimate is unreliable. */
-  def withLoopConf[T](spark: SparkSession, partitions: Int,
-      allowBroadcast: Boolean = true)(body: => T): T = {
-    require(partitions >= 1, s"withLoopConf: bad partition count $partitions")
-    val kp = "spark.sql.shuffle.partitions"
-    val kb = "spark.sql.autoBroadcastJoinThreshold"
-    val pp = spark.conf.get(kp)
-    val pb = spark.conf.get(kb)
-    spark.conf.set(kp, partitions.toString)
-    if (!allowBroadcast) spark.conf.set(kb, "-1")
-    try withStaticPlan(spark)(body)
-    finally { spark.conf.set(kp, pp); spark.conf.set(kb, pb) }
-  }
-
   /** Idempotent session tuning for sessions we did not build (driver-made
     * sessions in Verify/Bench): set the semantics-critical confs only. */
   def tune(spark: SparkSession): SparkSession = {

@@ -5,7 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Checkpoints, GraftSession}
+import graft.core.{Checkpoints, Fixpoint}
 
 /** Distributed BPE VOCABULARY LEARNING (Sennrich et al. 2016 —
   * public): the training loop that produces the ordered merges table
@@ -30,8 +30,9 @@ import graft.core.{Checkpoints, GraftSession}
   * monotonically.
   *
   * Loop mechanics follow the repo's iterative-operator discipline
-  * ([[Graph]] power iteration): `withLoopConf` static plan with a
-  * vocab-sized partition count decided once, rotating local
+  * ([[Graph]] power iteration): a [[graft.core.Fixpoint]] scope —
+  * static plan with a vocab-sized partition count decided once,
+  * rotating local
   * checkpoints at an ADAPTIVE cadence ([[cadenceFor]]): every round
   * while the vocab table is floor-sized (the per-round cost there is
   * Catalyst reanalysis, which a fused apply-lambda chain inflates),
@@ -162,27 +163,27 @@ object Bpe {
     val spark = docs.sparkSession
     val merges = ArrayBuffer.empty[Merge]
     if (maxMerges == 0) return merges.toSeq
-    val rot = new Checkpoints.Rotating
     // one corpus pass; the checkpoint also gives loopPartitionsOf a
     // real row count without re-running the corpus aggregation
-    var cur = rot(seedWords(docs, textCol))
-    val vocabRows = cur.count()
-    val p = GraftSession.loopPartitionsOf(math.max(1L, vocabRows))
+    val seed = seedWords(docs, textCol).localCheckpoint()
+    val vocabRows = seed.count()
+    val p = Fixpoint.loopPartitionsOf(math.max(1L, vocabRows))
     val cpEvery =
       if (checkpointEvery > 0) checkpointEvery
       else cadenceFor(vocabRows, 8)
-    GraftSession.withLoopConf(spark, p) {
-      recountRounds(cur, rot, merges, maxMerges, minCount, cpEvery)
+    Fixpoint.scope(spark, p) { loop =>
+      val rot = loop.rotating()
+      recountRounds(rot.adopt(seed), rot, merges, maxMerges, minCount,
+        cpEvery)
     }
-    rot.releaseLast()
     merges.toSeq
   }
 
   /** The recount face's round loop from a prepared (toks, freq)
     * state, appending to `merges` — shared by [[learnMerges]] and the
     * recount arm of [[learnMergesAuto]]. Runs inside the caller's
-    * `withLoopConf`; `rot` owns the state checkpoints (including the
-    * caller's seed, which the first rotation releases). */
+    * [[Fixpoint.scope]]; `rot` owns the state checkpoints (including
+    * the caller's seed, which the first rotation releases). */
   private def recountRounds(cur0: DataFrame, rot: Checkpoints.Rotating,
       merges: ArrayBuffer[Merge], maxMerges: Int, minCount: Long,
       cpEvery: Int): Unit = {
@@ -256,8 +257,8 @@ object Bpe {
     * fold, no vocab-wide pair explode.
     *
     * Plumbing: the seed is re-checkpointed at the loop partition
-    * count UNDER the static planner (localCheckpoint under AQE
-    * captures UnknownPartitioning — the r19 classifier lesson; the
+    * count inside the [[Fixpoint.scope]], so the checkpoints keep
+    * their partitioning (see [[Fixpoint.Scope.layout]]; the
     * word chain itself is join-free, so its hash keys are only row
     * balance, but the counts checkpoint's `pair` partitioning is
     * load-bearing: the merge join is exchange-free on the counts
@@ -337,13 +338,11 @@ object Bpe {
     val spark = docs.sparkSession
     val merges = ArrayBuffer.empty[Merge]
     if (maxMerges == 0) return merges.toSeq
-    val rotW = new Checkpoints.Rotating
-    val rotC = new Checkpoints.Rotating
     // seed once under AQE for the row count; the loop-state copy is
     // re-checkpointed word-partitioned under the static planner below
     val seed0 = seedWordsKeyed(docs, textCol).localCheckpoint()
     val vocabRows = seed0.count()
-    val p = GraftSession.loopPartitionsOf(math.max(1L, vocabRows))
+    val p = Fixpoint.loopPartitionsOf(math.max(1L, vocabRows))
     val cpW =
       if (checkpointEvery > 0) checkpointEvery
       else cadenceFor(vocabRows, 8)
@@ -364,7 +363,9 @@ object Bpe {
       System.err.println("learnMergesIncremental: " +
         s"countsCheckpointEvery=$countsCheckpointEvery rounded to " +
         s"$cpC (largest divisor of the adaptive words cadence $cpW)")
-    GraftSession.withLoopConf(spark, p) {
+    Fixpoint.scope(spark, p) { loop =>
+      val rotW = loop.rotating()
+      val rotC = loop.rotating()
       val cur = rotW(seed0.repartition(p, col("word")))
       Checkpoints.release(seed0)
       // seed counts: the one full pair explode of this face — off
@@ -376,15 +377,13 @@ object Bpe {
       incrementalRounds(cur, counts, rotW, rotC, merges, maxMerges,
         minCount, cpW, cpC, p, probe = 0, onAffected = null): Unit
     }
-    rotW.releaseLast()
-    rotC.releaseLast()
     merges.toSeq
   }
 
   /** The incremental face's round loop from prepared (word table,
     * pair-count table) states, appending to `merges` — shared by
     * [[learnMergesIncremental]] and [[learnMergesAuto]]. Runs inside
-    * the caller's `withLoopConf`; the rotators own the state
+    * the caller's [[Fixpoint.scope]]; the rotators own the state
     * checkpoints. For the first `probe` rounds of THIS call the
     * affected-row count is materialized (one extra count job per
     * probed round — the statistic both faces' duality turns on) and
@@ -446,7 +445,7 @@ object Bpe {
           .filter(col("cnt") > 0)
         // mirror the words-side `merges.size < maxMerges` guard:
         // the final round needs no counts checkpoint — nothing
-        // lazy survives the loop exit (releaseLast follows), so a
+        // lazy survives the loop exit (the scope releases it), so a
         // cadence-boundary landing on the last merge would pay one
         // materialization only to immediately free it
         sinceCpC += 1
@@ -515,15 +514,15 @@ object Bpe {
     val spark = docs.sparkSession
     val merges = ArrayBuffer.empty[Merge]
     if (maxMerges == 0) return AutoLearn(Nil, "incremental", 0.0)
-    val rotW = new Checkpoints.Rotating
-    val rotC = new Checkpoints.Rotating
     val seed0 = seedWordsKeyed(docs, textCol).localCheckpoint()
     val vocabRows = seed0.count()
-    val p = GraftSession.loopPartitionsOf(math.max(1L, vocabRows))
+    val p = Fixpoint.loopPartitionsOf(math.max(1L, vocabRows))
     var affectedSum = 0L
     var probed = 0
     var face = "incremental"
-    val frac = GraftSession.withLoopConf(spark, p) {
+    val frac = Fixpoint.scope(spark, p) { loop =>
+      val rotW = loop.rotating()
+      val rotC = loop.rotating()
       val cur = rotW(seed0.repartition(p, col("word")))
       Checkpoints.release(seed0)
       val counts = rotC(cur
@@ -567,8 +566,6 @@ object Bpe {
       }
       fr
     }
-    rotW.releaseLast()
-    rotC.releaseLast()
     AutoLearn(merges.toSeq, face, frac)
   }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Checkpoints, GraftSession}
+import graft.core.{Checkpoints, Fixpoint}
 
 /** Distributed QUALITY-CLASSIFIER training — the second LEARNED
   * artifact of the curation pipeline (after [[Bpe]]'s vocabulary):
@@ -211,14 +211,8 @@ object Classifier {
     require(nDocs == stats.getLong(2),
       s"train: $idCol must be unique across labeled docs " +
         s"($nDocs labeled rows, ${stats.getLong(2)} distinct ids)")
-    // dense-stage sizing (the join-walk discipline): each epoch is a
-    // CPU-dense pass over the feature table — ~1M rows/task at scale,
-    // core-fill floored so a mid-size corpus doesn't run 1-wide
-    val coreFill = math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      (featRows + 65535L) / 65536L)
-    val p = math.min(math.max((featRows + 999999L) / 1000000L,
-      math.max(1L, coreFill)), 65536L).toInt
+    // each epoch is a CPU-dense pass over the feature table
+    val p = Fixpoint.densePartitionsOf(spark, featRows)
     val w = new Array[Long](cfg.buckets)
     var b0 = 0L
     init.foreach { case (b, v) =>
@@ -230,22 +224,12 @@ object Classifier {
     // only: the error frame is doc-sized (never broadcastable at
     // corpus scale — its intermediate stats estimate must not tempt
     // the planner), the weights are model-sized always
-    GraftSession.withLoopConf(spark, p, allowBroadcast = false) {
-      // partitioned BY DOCUMENT and SORTED by document within each
-      // partition: the per-doc dot product runs as a WINDOW over the
-      // checkpoint's own partitioning+ordering — no per-epoch join
-      // back on id, no per-epoch sort (the previous join spelling
-      // scanned the feature table twice per epoch and sort-merged it
-      // against the error frame: 2 scans + 2 sorts/epoch; guide §2.4
-      // — two operations keyed the same way share one layout, paid
-      // once at checkpoint time). The checkpoint MUST be built here,
-      // under the static planner: localCheckpoint under AQE captures
-      // UnknownPartitioning — the adaptive plan's partitioning is not
-      // stable at capture time — and every epoch then re-shuffles and
-      // re-sorts (plan-verified refutation of the naive spelling)
-      val feats = cp0.repartition(p, col(idCol))
-        .sortWithinPartitions(col(idCol))
-        .localCheckpoint()
+    Fixpoint.scope(spark, p, allowBroadcast = false) { loop =>
+      // laid out BY DOCUMENT: the per-doc dot product runs as a WINDOW
+      // over the layout — no per-epoch join back on id, no per-epoch
+      // sort (the join spelling scanned the feature table twice per
+      // epoch and sort-merged it against the error frame)
+      val feats = loop.layout(cp0, idCol)
       Checkpoints.release(cp0)
       val n = nDocs
       // a cold-start train with nothing to learn from is a caller
@@ -268,8 +252,7 @@ object Classifier {
         // the window's sum is bit-equal to the old groupBy+join's) →
         // per-row hard-sigmoid error → model-sized bucket gradient.
         // Plan: scan → BHJ → Window (no exchange, no sort — the
-        // checkpoint carries hashpartitioning(id) and id-ascending
-        // ordering) → partial agg → ONE ≤buckets+1-row exchange.
+        // layout) → partial agg → ONE ≤buckets+1-row exchange.
         val err =
           greatest(lit(0L), least(lit(cfg.scale),
             expr(s"(z - z % ${cfg.slope}) div ${cfg.slope}")
@@ -293,9 +276,7 @@ object Classifier {
       }
       val weights = (Bias until cfg.buckets).map(b =>
         b -> (if (b == Bias) b0 else w(b)))
-      val out = finish(weights, feats)
-      Checkpoints.release(feats)
-      out
+      finish(weights, feats)
     }
   }
 

@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.sql.{GraftColumnBridge => CB}
 
+import graft.core.{Checkpoints, Fixpoint}
+
 /** Document-deduplication operators (exact, MinHash+LSH, SimHash,
   * n-gram Jaccard) — the candidate-generation patterns a 100 TB
   * training-data pipeline needs. Everything is shuffle-bounded:
@@ -241,7 +243,7 @@ object Dedup {
       .join(flagged, col(idCol) === col("b_id"), "left_anti")
       .select(col(idCol))
       .localCheckpoint()
-    graft.core.Checkpoints.release(cands)
+    Checkpoints.release(cands)
     out
   }
 
@@ -822,28 +824,20 @@ object Dedup {
       col(bCol).cast("long").as("b"))
     val sym = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
       .distinct().localCheckpoint()
-    var labels = sym.select(col("a").as("id")).distinct()
+    val labels0 = sym.select(col("a").as("id")).distinct()
       .withColumn("comp", col("id")).localCheckpoint()
+    // the round shape never changes, so AQE's per-stage jobs (~6 per
+    // round here) buy nothing; the per-round broadcast builds of the
+    // label/nbrMin/stepped frames were ~3 driver jobs per round, and
+    // the one edge-sized join rides the edge layout instead
+    val p = Fixpoint.loopPartitionsOf(sym.count())
+    Fixpoint.scope(sym.sparkSession, p, allowBroadcast = false) { loop =>
+    val symByA = loop.layout(sym, "a")
+    Checkpoints.release(sym)
+    val rotate = loop.rotating()
+    var labels = rotate.adopt(labels0)
     var iter = 0
     var changed = 1L
-    // loop-sized static plan (see GraftSession.withLoopConf): the
-    // round shape never changes, so AQE's per-stage jobs (~6 per
-    // round here) buy nothing — p comes off the materialized edge
-    // checkpoint's real count, once. Broadcast OFF (r21, the rank-loop
-    // layout discipline): the per-round broadcast builds of the label/
-    // nbrMin/stepped frames were ~3 driver jobs per round the fixpoint
-    // cannot amortize, and the one edge-sized join below rides a
-    // partitioned+sorted edge checkpoint instead (zero edge-side
-    // exchange/sort under the static planner — the r20 classifier
-    // layout mechanism), so everything that shuffles per round is
-    // label-table-sized. At corpus scale a |V| label table was never
-    // broadcastable anyway — this is also the 100× plan.
-    val p = graft.core.GraftSession.loopPartitionsOf(sym.count())
-    graft.core.GraftSession.withLoopConf(sym.sparkSession, p,
-      allowBroadcast = false) {
-    val symByA = sym.repartition(p, col("a"))
-      .sortWithinPartitions(col("a")).localCheckpoint()
-    graft.core.Checkpoints.release(sym)
     while (changed > 0 && iter < maxIter) {
       val nbrMin = symByA
         .join(labels.select(col("id").as("a"), col("comp")), "a")
@@ -862,21 +856,19 @@ object Dedup {
       // exploding 7x/round after ~8 rounds on the entity-resolution
       // graph — a nested-self-join planning pathology, not data — while
       // the single-jump rounds stay flat (~0.35 s at 15k labels).
-      val jumped = stepped
+      val jumped = rotate(stepped
         .join(stepped.select(col("id").as("cid"), col("comp").as("cc")),
           col("comp") === col("cid"), "left")
         .select(col("id"), col("prev"), least(col("comp"), coalesce(col("cc"),
-          col("comp"))).as("comp"))
-        .localCheckpoint()
+          col("comp"))).as("comp")))
       changed = jumped.filter(col("comp") =!= col("prev")).count()
       labels = jumped.select("id", "comp")
       iter += 1
     }
-    graft.core.Checkpoints.release(symByA)
-    } // withLoopConf
     require(changed == 0,
       s"connectedComponents did not converge in $maxIter rounds")
     labels
+    }
   }
 
   /** The deduplicated corpus: resolve candidate pairs into clusters and

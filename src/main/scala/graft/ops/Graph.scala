@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.{Checkpoints, GraftSession}
+import graft.core.{Checkpoints, Fixpoint}
 
 /** Link-graph centrality for corpus curation: PageRank over a
   * domain/document link graph is the classic web-scale quality prior
@@ -35,6 +35,11 @@ import graft.core.{Checkpoints, GraftSession}
   * plan stays O(1) deep. Dangling nodes (no out-edges) simply leak
   * their damped mass — the standard simplification; ranks remain a
   * valid centrality order.
+  *
+  * The iterative members (PageRank, TrustRank, HITS, k-core) run
+  * their rounds in a [[graft.core.Fixpoint]] scope: static plan,
+  * loop-sized partitions, key-sorted edge layouts and rotating state,
+  * all with one spelling shared by every iterative operator.
   */
 object Graph {
 
@@ -65,11 +70,10 @@ object Graph {
     require(nNodes > 0, "pageRank: empty graph")
     val r0 = scale / nNodes
     val base = (100L - dampingPct) * r0 / 100L
-    GraftSession.withLoopConf(edges.sparkSession, p,
-      allowBroadcast = false) {
-      powerIterate(
+    Fixpoint.scope(edges.sparkSession, p, allowBroadcast = false) { loop =>
+      powerIterate(loop,
         nodes.select(col("node"), lit(base).as("base"), lit(r0).as("r0")),
-        eDeg, iterations, dampingPct, nodes, p)
+        eDeg, iterations, dampingPct, nodes)
     }
   }
 
@@ -99,14 +103,13 @@ object Graph {
     require(nSeeds > 0, "trustRank: no seed intersects the node universe")
     val r0 = scale / nSeeds
     val base = (100L - dampingPct) * r0 / 100L
-    GraftSession.withLoopConf(edges.sparkSession, p,
-      allowBroadcast = false) {
-      powerIterate(
+    Fixpoint.scope(edges.sparkSession, p, allowBroadcast = false) { loop =>
+      powerIterate(loop,
         nodes.join(broadcast(s), Seq("node"), "left")
           .select(col("node"),
             when(col("_seed"), lit(base)).otherwise(lit(0L)).as("base"),
             when(col("_seed"), lit(r0)).otherwise(lit(0L)).as("r0")),
-        eDeg, iterations, dampingPct, nodes, p)
+        eDeg, iterations, dampingPct, nodes)
     }
   }
 
@@ -168,10 +171,9 @@ object Graph {
       .localCheckpoint()
     val nNodes = nNodesOpt.filter(_ => nodesOpt.isDefined)
       .getOrElse(nodes.count())
-    val p = loopPartitions(math.max(e.count(), nNodes))
+    val p = Fixpoint.loopPartitionsOf(math.max(e.count(), nNodes))
     val r0 = scale / nNodes
     require(r0 > 0, s"hits: scale $scale must be >= node count $nNodes")
-    val rotate = new Checkpoints.Rotating
     // degrees are loop-invariant: fold them onto the state frame ONCE
     // (outer joins sized by the ambient AQE session — the one-shot
     // prep discipline), so every round's normalizer totals read
@@ -182,26 +184,21 @@ object Graph {
       .agg(count(lit(1)).as("od"))
     val ideg = e.groupBy(col("dst").as("node"))
       .agg(count(lit(1)).as("id"))
-    var st = rotate(nodes
+    val st0 = nodes
       .join(odeg, Seq("node"), "left").join(ideg, Seq("node"), "left")
       .select(col("node"), lit(r0).as("h"), lit(r0).as("a"),
         coalesce(col("od"), lit(0L)).as("od"),
-        coalesce(col("id"), lit(0L)).as("id")))
+        coalesce(col("id"), lit(0L)).as("id"))
+      .localCheckpoint()
     Checkpoints.release(nodes)
-    GraftSession.withLoopConf(edges.sparkSession, p,
-      allowBroadcast = false) {
-    // the loop-invariant edge list laid out by EACH join key once —
-    // partitioned + sorted and checkpointed under the static planner
-    // (the kcore/pageRank r21 layout discipline), so both per-round
-    // state joins run with zero edge-side exchange and zero edge-side
-    // sort under broadcast-off; only the |V|-sized state frames
-    // shuffle per round, which is also the 100× plan (|V| state was
-    // never broadcastable at corpus scale).
-    val eBySrc = e.repartition(p, col("src"))
-      .sortWithinPartitions(col("src")).localCheckpoint()
-    val eByDst = e.repartition(p, col("dst"))
-      .sortWithinPartitions(col("dst")).localCheckpoint()
+    Fixpoint.scope(edges.sparkSession, p, allowBroadcast = false) { loop =>
+    // the edge list laid out by EACH join key: both per-round state
+    // joins ride a layout
+    val eBySrc = loop.layout(e, "src")
+    val eByDst = loop.layout(e, "dst")
     Checkpoints.release(e)
+    val rotate = loop.rotating()
+    var st = rotate.adopt(st0)
     for (_ <- 1 to iterations) {
       // normalizer totals off the |V|-row checkpoint — two scalars to
       // the driver (the bounded loop-control class, like every
@@ -240,10 +237,8 @@ object Graph {
           expr(s"coalesce(araw, 0L) * ${scale}L div ${aTot}L").as("a"),
           col("od"), col("id")))
     }
-    Checkpoints.release(eBySrc)
-    Checkpoints.release(eByDst)
-    } // withLoopConf
-    st.select(col("node"), col("h"), col("a"))
+    st
+    }.select(col("node"), col("h"), col("a"))
   }
 
   /** Per-node triangle participation over an UNDIRECTED reading of the
@@ -337,9 +332,7 @@ object Graph {
     * alive set (the pre-r21 shape: two |E|-sized semi-join shuffles
     * per round, ~13 exchanges per fused round). The adjacency list
     * (both directions) is partitioned AND sorted by the NEIGHBOR key
-    * once, under the static planner (the r20 classifier checkpoint-
-    * layout trick: a static-planner localCheckpoint preserves
-    * hashpartitioning and ordering), so the per-round removed-
+    * once ([[Fixpoint.Scope.layout]]), so the per-round removed-
     * neighbor join runs with zero adj-side exchange and zero adj-side
     * sort; everything that shuffles per round is peel-STATE-sized
     * (the removed set, the per-survivor drop counts). Total edge
@@ -364,28 +357,17 @@ object Graph {
         greatest(col("a"), col("b")).as("b"))
       .distinct()
       .localCheckpoint() // consumed once, by the adjacency build
-    val p = loopPartitions(und.count())
-    // broadcast OFF for the peel (r20, measured): per-round broadcast
-    // BUILD jobs were the loop's job bill (158 jobs pre-r20); under
-    // shuffle joins a whole fused round is ONE materialization job +
-    // one count, and at corpus scale the peel state is |V|-sized —
-    // never broadcastable — so the shuffle plan is also the 100× one.
-    GraftSession.withLoopConf(edges.sparkSession, p,
-      allowBroadcast = false) {
-    val rotate = new Checkpoints.Rotating
+    val p = Fixpoint.loopPartitionsOf(und.count())
+    Fixpoint.scope(edges.sparkSession, p, allowBroadcast = false) { loop =>
+    val rotate = loop.rotating()
     // adjacency in both directions, laid out by the REMOVED-side key:
-    // partitioned + sorted by `other` and checkpointed under the
-    // static planner, so each round's inner join against the removed
-    // set needs no adj-side exchange and no adj-side sort — the adj
-    // checkpoint is SCANNED per round (pipelined SMJ probe), never
-    // shuffled.
-    val adj = und.select(explode(array(
+    // each round's join against the removed set scans it, never
+    // shuffles it
+    val adj = loop.layout(und.select(explode(array(
         struct(col("a").as("node"), col("b").as("other")),
         struct(col("b").as("node"), col("a").as("other")))).as("e"))
-      .select(col("e.node").as("node"), col("e.other").as("other"))
-      .repartition(p, col("other"))
-      .sortWithinPartitions(col("other"))
-      .localCheckpoint()
+      .select(col("e.node").as("node"), col("e.other").as("other")),
+      "other")
     Checkpoints.release(und)
     // ONE incremental peel step off a state frame of
     // (node, degree-among-current-survivors): split out the removed
@@ -428,33 +410,27 @@ object Graph {
       stable = m == n || m == 0
       if (m == 0) {
         // peel hit bottom: the k-core is empty (confluence). A fresh
-        // empty frame — the released checkpoints must not be re-read.
-        rotate.releaseLast()
+        // empty frame — the scope releases the last state, which this
+        // frame does not read.
         state = adj.sparkSession.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](),
           next.schema)
       } else state = next
       n = m
     }
-    Checkpoints.release(adj)
     state
-    } // withLoopConf
+    }
   }
-
-  /** Loop-sized shuffle partition count — the canonical spelling is
-    * [[GraftSession.loopPartitionsOf]]. */
-  private[ops] def loopPartitions(maxRows: Long): Int =
-    GraftSession.loopPartitionsOf(maxRows)
 
   /** Shared setup: normalized edge list with out-degree folded on +
     * the node universe, both checkpointed ONCE (the one-shot
     * unknown-cardinality joins run under the ambient AQE session —
     * sizing those is what AQE is for), plus the loop-sized partition
     * count p off the materialized invariants' counts. The loop itself
-    * runs under [[GraftSession.withLoopConf]](p): every per-round
+    * runs in a [[Fixpoint.scope]] of p partitions: every per-round
     * exchange is p-partitioned and the rounds between checkpoints run
-    * as one job. (Local checkpoints do NOT preserve physical
-    * partitioning in Spark 4.1 — a `Scan ExistingRDD` plans with
+    * as one job. (Local checkpoints taken under AQE do NOT preserve
+    * physical partitioning in Spark 4.1 — a `Scan ExistingRDD` plans with
     * UnknownPartitioning, verified against the executed plan — so
     * there is deliberately no repartition-before-checkpoint here: it
     * would buy nothing and cost an |E| exchange.)
@@ -475,7 +451,7 @@ object Graph {
     // universe (the derived src∪dst universe has no caller count)
     val nNodes = nNodesOpt.filter(_ => nodesOpt.isDefined)
       .getOrElse(nodes0.count())
-    val p = loopPartitions(math.max(eDeg0.count(), nNodes))
+    val p = Fixpoint.loopPartitionsOf(math.max(eDeg0.count(), nNodes))
     (nodes0, eDeg0, p, nNodes)
   }
 
@@ -483,35 +459,17 @@ object Graph {
     * constant for PageRank, seed-gated for TrustRank. `prepNodes` is
     * [[prepare]]'s universe checkpoint, released as soon as the seeded
     * frame (which subsumes it) is materialized. */
-  private def powerIterate(seeded: DataFrame, eDeg: DataFrame,
-      iterations: Int, dampingPct: Int, prepNodes: DataFrame,
-      p: Int): DataFrame = {
+  private def powerIterate(loop: Fixpoint.Scope, seeded: DataFrame,
+      eDeg: DataFrame, iterations: Int, dampingPct: Int,
+      prepNodes: DataFrame): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100]: $dampingPct")
     val nodes = seeded.localCheckpoint()
     Checkpoints.release(prepNodes)
-    // r21: the loop-invariant degree-folded edge list laid out by its
-    // JOIN KEY once — partitioned + sorted by src and checkpointed
-    // under the static planner (the kcore adjacency discipline, via
-    // the r20 classifier layout mechanism), so every round's rank
-    // join runs with ZERO edge-side exchange and ZERO edge-side sort.
-    // That is what makes broadcast-off (the callers' loop conf) a win
-    // here NOW: the r20 refutation f42231b measured broadcast-off
-    // WITHOUT this layout, and its cost — a per-round SortMergeJoin
-    // re-sort of the whole edge list (trustrank task time 1.1→2.2 s)
-    // — is exactly what the sorted checkpoint removes. What remains
-    // is the benefit side of that trade: no per-round rank-broadcast
-    // BUILD job (trustrank read ~2.4 jobs/round; the build is a
-    // driver job the round fusion cannot remove), and only the
-    // |V|-sized rank frame shuffles per round — which is also the
-    // plan that survives 100×, where |V| ranks were never
-    // broadcastable anyway.
-    val eSorted = eDeg.repartition(p, col("src"))
-      .sortWithinPartitions(col("src"))
-      .localCheckpoint()
+    val eSorted = loop.layout(eDeg, "src")
     Checkpoints.release(eDeg)
-    val rotate = new Checkpoints.Rotating
+    val rotate = loop.rotating()
     var ranks = nodes.select(col("node"), col("r0").as("rank"))
     for (i <- 1 to iterations) {
       // ONE exchange, ZERO broadcasts per round (r20 union-agg fold +
@@ -522,8 +480,7 @@ object Graph {
       // `nodes LEFT JOIN contrib` broadcast build, identical integer
       // arithmetic: base + (d × Σshare) div 100, Σ over the same
       // share set, max(base) over exactly one non-zero row). The rank
-      // join rides eSorted's checkpoint layout, so only the |V|-rank
-      // frame exchanges+sorts per round.
+      // join rides eSorted's layout.
       val next = eSorted
         .join(ranks, eSorted("src") === ranks("node"))
         .select(col("dst").as("node"),
@@ -548,7 +505,6 @@ object Graph {
     // the final checkpoint IS the result; the loop-invariant inputs
     // are not referenced by it (checkpoints truncate lineage)
     Checkpoints.release(nodes)
-    Checkpoints.release(eSorted)
     ranks
   }
 }

@@ -708,7 +708,7 @@ object Sketch {
     require(permilles.nonEmpty &&
       permilles.forall(p => p >= 1 && p <= 1000),
       s"permilles must be within [1, 1000]: $permilles")
-    import graft.core.{Checkpoints, GraftSession}
+    import graft.core.{Checkpoints, Fixpoint}
     val spark = grid.sparkSession
     val gcols = groupCols.map(col)
     // the grid is the walk's one corpus-scale frame (cells ≈ rows×32
@@ -742,20 +742,11 @@ object Sketch {
       if (fuse) fusedFanRows else nWalkers * 16L * depth
     // dense-stage sizing, NOT loopPartitionsOf's 4M shuffle-rows/task:
     // each round runs walker-partitioned window sorts plus a grid
-    // join over the fan — CPU-dense work. Two terms: ~1M rows/task
-    // keeps tasks meaty at corpus scale, and the core-fill floor
-    // (defaultParallelism, bounded so tasks never shrink below ~64k
-    // rows) keeps a mid-size walk from running 4-wide on a 32-core
-    // box (p=1 put q_user_dashboard's fan through single-task sorts:
-    // 17 s measured; p=4 still left 8× idle). Tiny dashboard-sized
-    // walks still land at p=1 — no added task floors.
+    // join over the fan — CPU-dense work (p=1 put q_user_dashboard's
+    // fan through single-task sorts: 17 s measured on a 32-core box;
+    // p=4 still left 8× idle)
     val gridRows = gCp0.count()
-    val denseRows = math.max(fanRows, gridRows)
-    val coreFill = math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      (denseRows + 65535L) / 65536L)
-    val p = math.min(math.max((denseRows + 999999L) / 1000000L,
-      math.max(1L, coreFill)), 65536L).toInt
+    val p = Fixpoint.densePartitionsOf(spark, math.max(fanRows, gridRows))
     // the loop scans the grid once per broadcast build (16 per-level
     // slices on the sequential branch; 4 window slices on the fused
     // one — see the per-branch comments below) — hold it at the
@@ -814,7 +805,6 @@ object Sketch {
         expr("(permille * _n + 999) div 1000"))
       .select(gcols ++ Seq(col("permille"), col("target"),
         lit(0L).as("pfx"), lit(0L).as("base")): _*)
-    var prevCp = Option.empty[DataFrame]
     // the 2-level fuse halves the round (= job-floor) count but
     // evaluates 16² grandchildren per round where the sequential
     // descent evaluates 2×16 — an 8× candidate-CPU multiplier that
@@ -825,7 +815,7 @@ object Sketch {
     // RankSketchSpec pins fused ≡ sequential ≡ collected.
     // (`fuse` was decided above, before sizing, off the fused fan.)
     var w = walkers0
-    // broadcast stays ON (the withLoopConf default): each round's
+    // broadcast stays ON (the Fixpoint.scope default): each round's
     // slice join then broadcasts off the checkpoint's REAL size —
     // measured against the co-partitioned no-broadcast sort-merge
     // shape on the per-user domain, the broadcast plan wins (11.1 vs
@@ -834,7 +824,8 @@ object Sketch {
     // scan cost the SMJ pays anyway). At corpus scale the planner
     // flips to the shuffle join by size, which the co-partitioning
     // below makes exchange-free.
-    GraftSession.withLoopConf(spark, p) {
+    val done = Fixpoint.scope(spark, p) { loop =>
+      val rotate = loop.rotating()
       // hash the walkers exactly like the grid checkpoint: from here
       // every join, groupBy, and window in the descent is satisfied
       // by this one partitioning — no further exchange until the
@@ -857,11 +848,7 @@ object Sketch {
         // subtree that ReusedExchange builds ONCE: 4 grid scans +
         // broadcast builds per walk instead of 16 (the seed
         // checkpoint costs one extra walkers-sized job).
-        var wl = {
-          val cp = w.withColumn("_lvl", lit(15)).localCheckpoint()
-          prevCp = Some(cp)
-          cp
-        }
+        var wl = rotate(w.withColumn("_lvl", lit(15)))
         var level = 15
         while (level >= 0) {
           val winLo = (level / 4) * 4
@@ -900,14 +887,9 @@ object Sketch {
               (col("pfx") * 16 + col("j")).as("pfx"),
               (col("base") + col("S") - col("est")).as("base"),
               col("_lvl")): _*)
-          wl = if (level % 4 == 0) {
-            val cp = stepped
-              .withColumn("_lvl", col("_lvl") - lit(4))
-              .localCheckpoint()
-            prevCp.foreach(Checkpoints.release)
-            prevCp = Some(cp)
-            cp
-          } else stepped
+          wl = if (level % 4 == 0)
+            rotate(stepped.withColumn("_lvl", col("_lvl") - lit(4)))
+          else stepped
           level -= 1
         }
         w = wl.drop("_lvl")
@@ -982,23 +964,19 @@ object Sketch {
           .select(gcols ++ Seq(col("permille"), col("target"),
             ((col("pfx") * 16 + col("j1")) * 16 + col("j2")).as("pfx"),
             (col("base1") + col("S2") - col("estLo")).as("base")): _*)
-        w = if (lo % 4 == 0) {
-          val cp = stepped.localCheckpoint()
-          prevCp.foreach(Checkpoints.release)
-          prevCp = Some(cp)
-          cp
-        } else stepped
+        w = if (lo % 4 == 0) rotate(stepped) else stepped
         hi -= 2
       }
       }
+      w
     }
     // level 0 % 4 == 0, so the loop's last step ALWAYS checkpointed:
-    // `w` is an eager checkpoint whose lineage is truncated above gCp,
+    // `done` reads an eager checkpoint whose lineage is truncated above gCp,
     // and the grid's executor blocks (groups×grid cells — large in
     // exactly the unbounded-group regime this walk targets) can go now
     // rather than living for the session.
     Checkpoints.release(gCp)
-    w.select(gcols ++ Seq(col("permille"),
+    done.select(gcols ++ Seq(col("permille"),
       col("pfx").as("q_est")): _*)
   }
 

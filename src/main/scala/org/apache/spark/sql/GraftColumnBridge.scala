@@ -21,4 +21,11 @@ object GraftColumnBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(id, info, builder)
+
+  /** Block until every event posted so far has reached every listener
+    * — `SparkContext.listenerBus` is `private[spark]`, so dev tools
+    * that read listener output (plan dumps, job counts) drain it here
+    * instead of polling for quiet. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -31,6 +31,24 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(got.size == 61 && got.values.forall(_ == 0L))
   }
 
+  test("no persisted RDDs leak beyond the returned labels") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val chain = (0L until 60L).map(i => (i, i + 1)).toDF("a", "b")
+    val before = sc.getPersistentRDDs.keySet
+    val r = Dedup.connectedComponents(chain, "a", "b")
+    r.count()
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.size <= 1, s"leaked ${leaked.size}")
+    graft.core.Checkpoints.release(r)
+    // the did-not-converge failure releases everything it made
+    val before2 = sc.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(chain, "a", "b", maxIter = 1)
+    }
+    assert((sc.getPersistentRDDs.keySet -- before2).isEmpty)
+  }
+
   test("representatives keep one doc per cluster plus all unpaired docs") {
     import spark.implicits._
     val docs = (1L to 10L).map(i => (i, s"d$i")).toDF("id", "t")
