@@ -78,7 +78,7 @@ object GraftSession {
       // At 100 TB real partitions sit far above either floor, so this
       // only changes the small-shuffle + expensive-operator shape.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // FAIR so concurrent job submitters (ParseRunner's bounded pool)
+      // FAIR so concurrent job submitters (core.Fanout's bounded pool)
       // share executors instead of head-of-line blocking behind one job
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.sql.session.timeZone", "UTC")

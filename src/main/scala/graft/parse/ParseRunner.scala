@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.abi.{AbiEvent, AbiFunction, AbiJson, EvmContract}
+import graft.core.Fanout
 import graft.write.PartitionedWriter
 
 /** Where a parse stage gets its contract list. The reference has two
@@ -185,15 +186,17 @@ object ParseRunner {
     * shape), plain parquet otherwise. Returns (tableName, rowsWritten)
     * per task, in catalog order.
     *
-    * Tasks are submitted from a BOUNDED pool of `parallelism` driver
-    * threads into the `graft-parse` FAIR scheduler pool — the
-    * reference runs its 146+490 decode jobs as parallel Airflow tasks
-    * (`parser.py:71-98`, `build_chain_dags.py:14-15` parallelism
+    * Tasks are submitted through [[graft.core.Fanout]] from a BOUNDED
+    * pool of `parallelism` driver threads into its FAIR scheduler pool
+    * — the reference runs its 146+490 decode jobs as parallel Airflow
+    * tasks (`parser.py:71-98`, `build_chain_dags.py:14-15` parallelism
     * knobs); one-at-a-time submission would leave the cluster idle
-    * between small jobs at corpus width. Each task touches only its
-    * own output path and the shared cached inputs, so concurrent
-    * execution is write-disjoint; results are collected back into
-    * catalog order regardless of completion order. */
+    * between small jobs at corpus width. `select` runs on the calling
+    * thread. Each task touches only its own output path and the shared
+    * cached inputs, so concurrent execution is write-disjoint; results
+    * come back in catalog order regardless of completion order, and
+    * the inputs are unpersisted only after every started task has
+    * finished, a failed run included. */
   def run(spark: SparkSession, catalog: ContractCatalog,
       logs: DataFrame, traces: DataFrame, warehouse: String,
       select: ParseTask => Boolean = _ => true,
@@ -201,31 +204,9 @@ object ParseRunner {
     val selected = tasks(catalog).filter(select)
     // one materialization of the enriched day, shared by every decode
     logs.cache(); traces.cache()
-    try {
-      if (parallelism <= 1 || selected.size <= 1)
-        selected.map(runOne(spark, _, logs, traces, warehouse))
-      else {
-        import java.util.concurrent.Executors
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = Executors.newFixedThreadPool(parallelism)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        try {
-          val fs = selected.map { t =>
-            Future {
-              // local property is per-thread: every job this task
-              // submits lands in the shared FAIR pool (no-op when the
-              // context scheduler is FIFO)
-              spark.sparkContext
-                .setLocalProperty("spark.scheduler.pool", "graft-parse")
-              runOne(spark, t, logs, traces, warehouse)
-            }
-          }
-          Await.result(Future.sequence(fs), Duration.Inf)
-        } finally pool.shutdown()
-      }
-    } finally { logs.unpersist(); traces.unpersist() }
+    try Fanout.map(parallelism, selected)(
+      runOne(spark, _, logs, traces, warehouse))
+    finally { logs.unpersist(); traces.unpersist() }
   }
 
   private def runOne(spark: SparkSession, t: ParseTask,

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Fanout
 import graft.enrich.Enrich
 import graft.sources.RawTableReader
 import graft.write.PartitionedWriter
@@ -31,8 +32,12 @@ final case class LoadJob(
     sparkResource: graft.core.SparkResource = graft.core.EngineConf.Default) {
 
   def run(raw: Map[String, DataFrame], warehousePath: String,
-      ds: JobDate, filesPerPartition: Int = 1): Unit = {
-    val out = enrich(raw)
+      ds: JobDate, filesPerPartition: Int = 1): Unit =
+    write(enrich(raw), warehousePath, ds, filesPerPartition)
+
+  /** Write an enriched day (`enrich`'s output) to this job's table. */
+  def write(out: DataFrame, warehousePath: String, ds: JobDate,
+      filesPerPartition: Int = 1): Unit =
     mode match {
       case LoadJob.Overwrite =>
         PartitionedWriter.overwriteDaily(out, s"$warehousePath/$resource",
@@ -41,7 +46,6 @@ final case class LoadJob(
         PartitionedWriter.append(out, s"$warehousePath/$resource",
           filesPerPartition)
     }
-  }
 }
 
 object LoadJob {
@@ -105,12 +109,24 @@ object EvmLoaders {
     "tokens" -> Set("tokens"))
 }
 
-/** Multi-day backfill: one enrich-and-overwrite pass PER DAY in
+/** Multi-day backfill: one enrich-and-write pass PER DAY in
   * chronological order — the reference's Airflow catchup shape, and
   * the loop the enrich joins' contract requires (each pass sees ONE
   * chain-day of blocks, which is why `Enrich.*` may broadcast the
   * blocks side unconditionally; a months-wide blocks frame must never
-  * reach a single pass).
+  * reach a single pass). Days never overlap: the tokens append of day
+  * N+1 reads day N's warehouse through `rawForDay`.
+  *
+  * Within a day the loaders run side by side, as the reference's
+  * per-loader `enrich_{name}` Airflow tasks do (`evm_chain.py:178-212`):
+  * every loader's plan is built on the calling thread, in loader order
+  * (`enrich` closures never run concurrently), then the day's writes
+  * fan out through [[graft.core.Fanout]], one thread per loader. Each
+  * write touches only its own table, so two loaders writing one table
+  * (e.g. `traces` and `geth_traces`) are rejected up front. If a write
+  * fails, the day's other writes still run to completion before the
+  * first failure in loader order is rethrown; only then are the day's
+  * cached inputs released, and no later day starts.
   *
   * Re-running a day is idempotent for Overwrite-mode loaders (dynamic
   * partition overwrite replaces just that day); Append-mode loaders
@@ -127,13 +143,21 @@ object Backfill {
       warehousePath: String, from: LocalDate, to: LocalDate,
       filesPerPartition: Int = 1): Seq[JobDate] = {
     require(!to.isBefore(from), s"backfill range inverted: $from..$to")
+    val shared = loaders.groupBy(_.resource).collect {
+      case (t, js) if js.size > 1 => t }
+    require(shared.isEmpty,
+      s"loaders write one table concurrently: ${shared.mkString(", ")}")
     val days = Iterator.iterate(from)(_.plusDays(1))
       .takeWhile(!_.isAfter(to)).map(JobDate(_)).toSeq
     days.foreach { d =>
       val raw = rawForDay(d)
       raw.values.foreach(_.cache())
-      try loaders.foreach(_.run(raw, warehousePath, d, filesPerPartition))
-      finally raw.values.foreach(_.unpersist(false))
+      try {
+        val plans = loaders.map(job => job -> job.enrich(raw))
+        Fanout.map(loaders.size, plans) { case (job, out) =>
+          job.write(out, warehousePath, d, filesPerPartition)
+        }
+      } finally raw.values.foreach(_.unpersist(false))
     }
     days
   }
@@ -165,7 +189,9 @@ final case class DatabricksConfig(hostname: String, httpPath: String,
   * their parallelism (`numPartitions`): a 32-thread local write (or a
   * 1000-executor cluster write) must not open one connection per task
   * against a warehouse endpoint — the reference sizes transfer jobs to
-  * ≤12 cores for the same reason (`resource_apply.py:48-54`). */
+  * ≤12 cores for the same reason (`resource_apply.py:48-54`).
+  * [[Transfer.run]] ships up to 4 tables at once, so one transfer run
+  * holds at most 4 × `numPartitions` concurrent connections. */
 final class JdbcTransferSink(url: String,
     props: Map[String, String] = Map.empty,
     numPartitions: Int = 8,

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import graft.core.{EngineConf, SparkResource}
+import graft.core.{EngineConf, Fanout, SparkResource}
 import graft.parse.{ContractCatalog, ParseRunner}
 
 /** S12 — the transfer catalog: which tables a client warehouse receives
@@ -79,12 +79,22 @@ object Transfer {
     spec.raws.map(r => r.table -> r.resource) ++
       spec.allAbis(catalog).map(a => a.upstreamTaskId -> a.resource)
 
+  /** Tables shipped at once by [[run]] — the same bound as
+    * [[ParseRunner.run]]'s default parallelism. */
+  private val Width = 4
+
   /** Ship every task's table. JDBC identifiers can't hold dots, so
-    * `dataset.table` lands as `dataset_table`. Returns shipped names. */
+    * `dataset.table` lands as `dataset_table`. Every `resolve` runs on
+    * the calling thread, in task order; the sink writes then run side
+    * by side, [[Width]] at a time, like the reference's per-table
+    * SparkSubmits. Returns shipped names in task order. */
   def run(spec: TransferClientSpec, catalog: ContractCatalog,
-      sink: TransferSink, resolve: String => DataFrame): Seq[String] =
-    tasks(spec, catalog).map { case (name, _) =>
-      sink.write(resolve(name), name.replace('.', '_'))
+      sink: TransferSink, resolve: String => DataFrame): Seq[String] = {
+    val frames = tasks(spec, catalog).map { case (name, _) =>
+      name -> resolve(name) }
+    Fanout.map(Width, frames) { case (name, df) =>
+      sink.write(df, name.replace('.', '_'))
       name
     }
+  }
 }

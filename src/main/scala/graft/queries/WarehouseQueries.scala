@@ -1319,28 +1319,16 @@ object WarehouseQueries extends QueryGroup {
         // per-partition compaction is embarrassingly parallel (the
         // Compactor scaladoc's 100 TB deployment shape) — run the 14
         // survivors concurrently; each compact is an independent
-        // read→write→two-rename swap on its own directory
-        val (nb, na) = {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          // EXPLICIT parallelism bound (r19 verdict nit): each
-          // Future blocks a thread on a full Spark action, so the
-          // global ExecutionContext's core-count cap is an accident
-          // of where the code runs, not a sizing decision — 8
-          // concurrent per-partition compactions saturate this
-          // box's scheduler, and a 10k-partition vacuum lifting
-          // this pattern must pool-bound, not thread-per-partition
-          val pool = java.util.concurrent.Executors
-            .newFixedThreadPool(math.min(days.size, 8))
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutorService(pool)
-          try Await.result(
-            Future.traverse(days.toList) { d => Future {
-              val (b, a, _) =
-                graft.write.Compactor.compact(spark, d.toString)
-              (b, a)
-            }},
-            scala.concurrent.duration.Duration.Inf)
-          finally pool.shutdown()
+        // read→write→two-rename swap on its own directory. The width
+        // is an explicit bound: 8 concurrent compactions saturate a
+        // small box's scheduler, and a 10k-partition vacuum must stay
+        // pool-bounded, not thread-per-partition. Fanout returns only
+        // once every compaction has finished, so the cleanup below
+        // never deletes a directory a sibling still writes.
+        val (nb, na) = graft.core.Fanout.map(math.min(days.size, 8),
+            days) { d =>
+          val (b, a, _) = graft.write.Compactor.compact(spark, d.toString)
+          (b, a)
         }.unzip
         // the numFiles-drop pin: day cells are synopsis-sized, so
         // every survivor must compact to exactly one file, from a

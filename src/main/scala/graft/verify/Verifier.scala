@@ -2,12 +2,13 @@ package graft.verify
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Fanout
 
 /** The reference's verify DAG (SURVEY §2.4, §5): per-day SQL assertions
   * of the form `if(cond, 1, raise_error(msg))`
   * (`/root/reference/dags/resources/verify/` SQL files). Exposed both
   * ways:
-  *  - [[check]] — typed `Either` result for orchestration;
+  *  - [[runAll]] — typed `Either` results for orchestration;
   *  - [[raiseSql]] — `raise_error` parity (the query itself throws on a
   *    violated invariant, exactly like the reference's Spark SQL).
   */
@@ -17,25 +18,17 @@ object Verifier {
 
   /** blocks/transactions/logs/traces `_have_latest.sql`: the day's
     * partition is non-empty. */
-  def haveLatest(df: DataFrame, name: String): Either[VerifyError, Long] = {
-    val n = df.count()
+  private def haveLatest(name: String, n: Long): Either[VerifyError, Long] =
     if (n > 0) Right(n)
     else Left(VerifyError(name, s"$name partition is empty"))
-  }
 
   /** traces_null_address_equal_to_transaction_count.sql: #root traces
     * (trace_address = '[]') with non-null transaction_hash == #txs. */
-  def rootTraceCountMatches(traces: DataFrame, transactions: DataFrame)
-      : Either[VerifyError, Long] = {
-    val rootTraces = traces
-      .filter(col("trace_address") === "[]" &&
-        col("transaction_hash").isNotNull)
-      .count()
-    val txs = transactions.count()
+  private def rootTraceCountMatches(rootTraces: Long, txs: Long)
+      : Either[VerifyError, Long] =
     if (rootTraces == txs) Right(txs)
     else Left(VerifyError("traces_vs_transactions",
       s"root traces $rootTraces != transactions $txs"))
-  }
 
   /** `raise_error` parity: evaluates `if(cond, 1, raise_error(msg))`
     * over a 1-row aggregate, throwing inside the engine like the
@@ -48,14 +41,27 @@ object Verifier {
         .otherwise(raise_error(lit(msg))).as("ok"))
   }
 
-  /** Run all five reference invariants over enriched frames. */
+  /** Run all five reference invariants over enriched frames, reading
+    * each table once: the four table aggregates run side by side (the
+    * reference's verify SQLs are independent Airflow tasks), the
+    * transactions count serves both its own check and the root-trace
+    * invariant, and one traces pass counts rows and root traces. */
   def runAll(blocks: DataFrame, transactions: DataFrame, logs: DataFrame,
-      traces: DataFrame): Seq[Either[VerifyError, Long]] = Seq(
-    haveLatest(blocks, "blocks"),
-    haveLatest(transactions, "transactions"),
-    haveLatest(logs, "logs"),
-    haveLatest(traces, "traces"),
-    rootTraceCountMatches(traces, transactions))
+      traces: DataFrame): Seq[Either[VerifyError, Long]] = {
+    val rows = count(lit(1))
+    val rootTraces = count_if(col("trace_address") === "[]" &&
+      col("transaction_hash").isNotNull)
+    val Seq(b, t, l, tr) = Fanout.map(4, Seq(blocks.agg(rows),
+        transactions.agg(rows), logs.agg(rows),
+        traces.agg(rows, rootTraces)))(_.head())
+    val txs = t.getLong(0)
+    Seq(
+      haveLatest("blocks", b.getLong(0)),
+      haveLatest("transactions", txs),
+      haveLatest("logs", l.getLong(0)),
+      haveLatest("traces", tr.getLong(0)),
+      rootTraceCountMatches(tr.getLong(1), txs))
+  }
 
   /** Declarative data-quality constraints (the Deequ shape —
     * Schelter et al. 2018, public AWS research — and the

@@ -1462,6 +1462,26 @@ class VerifierSpec extends AnyFunSuite {
     assert(results.last.isLeft)
   }
 
+  test("an empty logs frame fails exactly the logs invariant") {
+    val li = Tables.df(spark, sf, "lineitem")
+    val o = Tables.df(spark, sf, "orders")
+    val ev = Tables.df(spark, sf, "events")
+    val blocks = graft.enrich.Enrich.blocks(EvmFixtures.blocks(o))
+    val txs = graft.enrich.Enrich.transactions(
+      EvmFixtures.transactions(li), EvmFixtures.blocks(o),
+      EvmFixtures.receipts(li))
+    val logs = graft.enrich.Enrich.logs(
+      EvmFixtures.logs(ev), EvmFixtures.blocksForLogs(ev))
+    val traces = graft.enrich.Enrich.traces(
+      EvmFixtures.traces(li), EvmFixtures.blocks(o))
+    val full = Verifier.runAll(blocks, txs, logs, traces)
+    val noLogs = Verifier.runAll(blocks, txs, logs.limit(0), traces)
+    assert(noLogs(2) ==
+      Left(Verifier.VerifyError("logs", "logs partition is empty")))
+    assert(full(2).isRight)
+    assert(noLogs.patch(2, Nil, 1) == full.patch(2, Nil, 1))
+  }
+
   test("raise_error parity throws on empty input") {
     val empty = Tables.df(spark, sf, "lineitem").filter(lit(false))
     val probe = Verifier.raiseSql(spark, empty, 1, "empty partition")

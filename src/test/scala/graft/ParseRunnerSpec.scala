@@ -31,6 +31,22 @@ class ParseRunnerSpec extends AnyFunSuite {
     lit("0xa0").as("to_address"),
     lit("0xt0").as("transaction_hash"))
 
+  private def data32(v: Long) = {
+    val b = new Array[Byte](32)
+    b(31) = v.toByte
+    b
+  }
+
+  /** one enriched log row */
+  private def logRow(topics: Seq[String], data: Array[Byte],
+      address: String, tx: String) = spark.range(1).select(
+    array(topics.map(lit): _*).as("topics_arr"),
+    lit(data).as("unhex_data"),
+    lit(address).as("address"),
+    lit(tx).as("transaction_hash"),
+    lit(0L).as("log_index"),
+    lit(0L).as("block_number"))
+
   test("every corpus element becomes a buildable decode job") {
     assume(new java.io.File(ParseQueries.CorpusDir).exists())
     val tasks = ParseRunner.tasks(catalog)
@@ -59,20 +75,6 @@ class ParseRunnerSpec extends AnyFunSuite {
       .find(_.tableName == "seaport.Seaport_evt_OrderFulfilled").get
     assert(seaport.event.get.topic0 == SeaportRoundtrip.event.topic0,
       "real Seaport OrderFulfilled shape must match the roundtrip fixture")
-
-    def data32(v: Long) = {
-      val b = new Array[Byte](32)
-      b(31) = v.toByte
-      b
-    }
-    def logRow(topics: Seq[String], data: Array[Byte], address: String,
-        tx: String) = spark.range(1).select(
-      array(topics.map(lit): _*).as("topics_arr"),
-      lit(data).as("unhex_data"),
-      lit(address).as("address"),
-      lit(tx).as("transaction_hash"),
-      lit(0L).as("log_index"),
-      lit(0L).as("block_number"))
 
     val logs =
       logRow(Seq(transferTopic, b64(7), b64(9)), data32(42), "0xa1", "0xt1")
@@ -129,6 +131,35 @@ class ParseRunnerSpec extends AnyFunSuite {
     // results come back in catalog order regardless of completion order
     assert(parR.map(_._1) == ParseRunner.tasks(catalog)
       .filter(t => names(t.tableName)).map(_.tableName))
+  }
+
+  test("parallel submission matches the sequential path over the " +
+      "in-repo slice catalog") {
+    val catalog = ParseQueries.sliceCatalog
+    val events = ParseRunner.tasks(catalog).filter(_.isEvent)
+    def task(name: String) = events.find(_.tableName == name).get
+    val transfer = task("common.erc20_evt_Transfer")
+    val approval = task("common.erc20_evt_Approval")
+    val punk = task("cryptopunks.CryptoPunksMarket_evt_PunkBought")
+    val logs =
+      logRow(Seq(transfer.event.get.topic0, b64(7), b64(9)), data32(42),
+        "0xa1", "0xt1")
+        .unionByName(logRow(Seq(transfer.event.get.topic0, b64(8), b64(9)),
+          data32(43), "0xa2", "0xt2"))
+        .unionByName(logRow(Seq(approval.event.get.topic0, b64(7), b64(8)),
+          data32(5), "0xa1", "0xt3"))
+        .unionByName(logRow(
+          Seq(punk.event.get.topic0, b64(123), b64(7), b64(9)), data32(44),
+          punk.contract.contractAddress.get.toLowerCase, "0xt4"))
+    def wh() = java.nio.file.Files.createTempDirectory("graft_whs").toString
+    val seqR = ParseRunner.run(spark, catalog, logs, tracesFixture, wh(),
+      _.isEvent, parallelism = 1)
+    val parR = ParseRunner.run(spark, catalog, logs, tracesFixture, wh(),
+      _.isEvent, parallelism = 4)
+    assert(parR == seqR)
+    assert(parR.map(_._1) == events.map(_.tableName))
+    assert(parR.toMap == Map(transfer.tableName -> 2L,
+      approval.tableName -> 1L, punk.tableName -> 1L))
   }
 
   test("HTTP catalog yields the identical corpus, and non-2xx fails hard") {

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.abi.AbiJson
@@ -62,6 +63,86 @@ class PipelineSpec extends AnyFunSuite {
       from.plusDays(1), from.plusDays(1))
     finally spark.conf.set(confKey, prev)
     assert(spark.read.parquet(s"$w/logs").count() == before)
+  }
+
+  test("backfill rejects two loaders writing one table") {
+    val d = java.time.LocalDate.parse("2026-02-01")
+    val e = intercept[IllegalArgumentException](
+      Backfill.run(Seq(EvmLoaders.all("traces"), EvmLoaders.all("geth_traces")),
+        _ => fail("no day may start"),
+        Files.createTempDirectory("graft_bf2").toString, d, d))
+    assert(e.getMessage.contains("traces"))
+  }
+
+  test("concurrent backfill writes what per-loader sequential runs write") {
+    val o = Tables.df(spark, sf, "orders")
+    val li = Tables.df(spark, sf, "lineitem")
+    val ev = Tables.df(spark, sf, "events")
+    val part = Tables.df(spark, sf, "part")
+    val loaders = EvmLoaders.chainSets("ethereum").toSeq.sorted
+      .map(EvmLoaders.all)
+    val from = java.time.LocalDate.parse("2026-04-01")
+    // day k reads the k-th half of every source; the two days' token
+    // slices overlap, so day 2's append must drop day 1's addresses
+    def rawFor(w: String)(d: JobDate) = {
+      val k = (d.ds.getDayOfMonth - 1).toLong
+      val oD = o.filter(col("o_orderkey") % 2 === k)
+      val liD = li.filter(col("l_orderkey") % 2 === k)
+      val logs = EvmFixtures.lineitemTx(liD).select(
+        col("l_linenumber").cast("long").as("log_index"),
+        concat(lit("0xt"), col("l_orderkey").cast("string"), lit("_"),
+          col("l_linenumber").cast("string")).as("transaction_hash"),
+        (col("l_linenumber") % 50).cast("long").as("transaction_index"),
+        concat(lit("0xb"), col("l_orderkey").cast("string")).as("block_hash"),
+        col("l_orderkey").as("block_number"),
+        concat(lit("0xa"), (col("l_partkey") % 97).cast("string"))
+          .as("address"),
+        concat(lit("0x"), lpad(hex(col("l_partkey")), 64, "0")).as("data"),
+        concat(lit("0xe"), (col("l_suppkey") % 7).cast("string"))
+          .as("topics"))
+      val tokens = EvmFixtures.tokensStaged(
+        part.filter(col("p_partkey") % 3 =!= 2 - k))
+      val existing =
+        if (new java.io.File(s"$w/tokens").isDirectory)
+          spark.read.parquet(s"$w/tokens").select("address")
+        else tokens.select("address").limit(0)
+      Map(
+        "blocks" -> EvmFixtures.blocks(oD),
+        "contracts" -> EvmFixtures.contracts(oD),
+        "transactions" -> EvmFixtures.transactions(liD),
+        "receipts" -> EvmFixtures.receipts(liD),
+        "logs" -> logs,
+        "traces" -> EvmFixtures.traces(liD),
+        "token_transfers" -> EvmFixtures.tokenTransfers(liD),
+        "prices" -> EvmFixtures.pricesStaged(
+          ev.filter(col("event_id") % 2 === k)),
+        "tokens" -> tokens,
+        "tokens_existing" -> existing)
+    }
+    val fanned = Files.createTempDirectory("graft_bf_fan").toString
+    val days = Backfill.run(loaders, rawFor(fanned), fanned, from,
+      from.plusDays(1))
+    val serial = Files.createTempDirectory("graft_bf_seq").toString
+    days.foreach(d => loaders.foreach(_.run(rawFor(serial)(d), serial, d)))
+
+    // order-insensitive content hash per dt
+    def byDt(w: String, t: String) = {
+      val df = spark.read.parquet(s"$w/$t")
+      df.groupBy("dt").agg(count(lit(1)),
+          sum(xxhash64(df.columns.toIndexedSeq.map(col): _*)
+            .cast("decimal(38,0)")))
+        .collect().map(r => r.get(0).toString -> (r.getLong(1), r.get(2)))
+        .toMap
+    }
+    loaders.map(_.resource).filter(_ != "tokens").foreach { t =>
+      val got = byDt(fanned, t)
+      assert(got.keySet == days.map(_.dsString).toSet, t)
+      assert(got == byDt(serial, t), t)
+    }
+    val tokens = Seq(fanned, serial).map(w =>
+      spark.read.parquet(s"$w/tokens").count())
+    // the two days' slices cover every part once between them
+    assert(tokens.head == tokens.last && tokens.head == part.count())
   }
 
   test("re-running a day is idempotent (same row count)") {
@@ -160,6 +241,29 @@ class PipelineSpec extends AnyFunSuite {
     sink.write(blocks, "blocks")
     assert(spark.read.format("jdbc").option("url", url)
       .option("dbtable", "blocks").load().count() == blocks.count())
+  }
+
+  test("transfer returns names in task order when writes finish out " +
+      "of order") {
+    val tables = Seq("blocks", "transactions", "logs", "traces")
+    val spec = TransferClientSpec("client",
+      raws = tables.map(TransferRawTable("ethereum", _)))
+    val caller = Thread.currentThread
+    val resolvedOn = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
+    val finished = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    // the first table's write is the slowest, the last one's the fastest
+    val sink = new TransferSink {
+      def write(df: DataFrame, table: String): Unit = {
+        Thread.sleep(150L * (tables.size - tables.indexOf(table)))
+        finished.add(table)
+      }
+    }
+    val shipped = Transfer.run(spec,
+      graft.parse.ContractCatalog.inMemory(Nil), sink,
+      { t => resolvedOn.add(Thread.currentThread); spark.range(1).toDF(t) })
+    assert(shipped == tables)
+    assert(finished.toArray.toSeq == tables.reverse)
+    assert(resolvedOn.toArray.toSeq == tables.map(_ => caller))
   }
 
   test("transfer catalog: contract expansion, dedup, naming, sizing") {
