@@ -23,11 +23,6 @@ object EventsStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  def readEvents(spark: SparkSession, path: String): DataFrame =
-    spark.readStream
-      .schema(eventsFileSchema)
-      .parquet(path)
-
   /** 5-minute tumbling-window counts with a 10-minute watermark — the
     * streaming twin of the batch aggregation. `ts` is truncated to
     * seconds BEFORE the watermark so the window groups on the
@@ -123,53 +118,11 @@ object EventsStream {
       queryName: String): DataFrame =
     runStream(spark, path, queryName, slidingAgg, "complete")
 
-  /** Production-shaped bounded run: parquet file sink + checkpoint, so
-    * results never transit driver memory (the memory-sink runners above
-    * are test harnesses only — a real stream through them would bottleneck
-    * on the driver). File sinks are append-only, so the windowed agg
-    * emits a window only once its end falls behind the watermark; on a
-    * bounded source the trailing (never-finalized) windows stay in state
-    * — callers comparing against a batch twin must restrict it to
-    * finalized windows. [[dedupKeys]] is append-native and exact.
-    * Returns the sink directory read back as a batch DataFrame. */
-  def runToFiles(spark: SparkSession, path: String, outDir: String,
-      pipeline: DataFrame => DataFrame): DataFrame = {
-    // checkpoint state is only meaningful for the bounded run itself —
-    // delete it afterwards so repeated spec/bench runs don't accumulate
-    // state-store files under /tmp
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    try {
-      boundedRun(spark, path, pipeline) { out =>
-        out.writeStream
-          .format("parquet")
-          .option("path", outDir)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append")
-      }
-    } finally deleteRecursively(ckpt)
-    spark.read.parquet(outDir)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.core.Fs.deleteRecursively(p)
-
   private def runStream(spark: SparkSession, path: String,
       queryName: String, pipeline: DataFrame => DataFrame,
       mode: String): DataFrame = {
-    boundedRun(spark, path, pipeline) { out =>
-      out.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode(mode)
-    }
+    StreamRun.bounded(spark, path, eventsFileSchema, pipeline)(
+      StreamRun.memory(queryName, mode))
     spark.table(queryName)
   }
-
-  /** Bounded run over the events reader — scaffolding shared with the
-    * document-ingest twins via [[StreamRun.bounded]]. */
-  private def boundedRun(spark: SparkSession, path: String,
-      pipeline: DataFrame => DataFrame)(
-      sink: DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row]): Unit =
-    StreamRun.bounded(spark, path, readEvents, pipeline)(sink)
 }

@@ -240,41 +240,27 @@ object FunnelStream {
     } finally graft.core.Fs.deleteRecursively(staged)
   }
 
-  /** Shared bounded-run scaffolding + report assembly for the two
-    * funnel folds: drain the pipeline into a memory sink, then build
-    * the (step_idx, step, users, permille) report off the monotone
-    * per-user max stage. */
+  /** Report assembly for the two funnel folds: drain the pipeline into
+    * a memory sink, then build the (step_idx, step, users, permille)
+    * report off the monotone per-user max stage; the sink's view is
+    * dropped once its rows are read. */
   private def runBounded(spark: SparkSession, path: String,
       steps: Seq[String], maxFilesPerTrigger: Option[Int],
       excludeUser: Option[Long])(
       pipeline: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
     val qn = s"graft_funnel_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fckpt")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val reader = spark.readStream.schema(EventsStream.eventsFileSchema)
-      val src = maxFilesPerTrigger
-        .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-        .parquet(path)
-      val q = pipeline(src)
-        .writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("update").start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.core.Fs.deleteRecursively(ckpt)
-    }
+    StreamRun.drain(spark, StreamRun.Source(path,
+      EventsStream.eventsFileSchema, maxFilesPerTrigger), pipeline)(
+      StreamRun.memory(qn, "update"))
     // stage is monotone per user: the final value is the max emission
     val emissions = excludeUser.fold(spark.table(qn))(u =>
       spark.table(qn).filter(col("user_id") =!= u))
-    val byStage = emissions
+    val byStage = try emissions
       .groupBy("user_id").agg(max(col("stage")).as("stage"))
       .groupBy("stage").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    finally spark.catalog.dropTempView(qn)
     val counts = steps.indices.map(i =>
       byStage.filter(_._1 >= i + 1).values.sum)
     val first = counts.head

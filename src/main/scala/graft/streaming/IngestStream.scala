@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Checkpoints
+
 /** Streaming document ingest against a STATIC warehouse index — the
   * micro-batch spelling of [[graft.ops.Dedup.incrementalExact]]'s
   * daily-batch shape: documents stream in, fingerprint map-side,
@@ -58,9 +60,6 @@ object IngestStream {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  def readDocs(spark: SparkSession, path: String): DataFrame =
-    spark.readStream.schema(docsFileSchema).parquet(path)
-
   /** The streaming pipeline: null-text rows excluded (the
     * incrementalExact null contract), fingerprint, stream-internal
     * first-occurrence dedup, stream-static anti join. Output:
@@ -79,11 +78,9 @@ object IngestStream {
   def runDedupToBatch(spark: SparkSession, path: String,
       seenFps: DataFrame, queryName: String,
       pre: DataFrame => DataFrame = identity): DataFrame = {
-    StreamRun.bounded(spark, path, readDocs,
-      df => dedupAgainstIndex(pre(df), seenFps, "doc_id", "text")) { out =>
-      out.writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-    }
+    StreamRun.bounded(spark, path, docsFileSchema,
+      df => dedupAgainstIndex(pre(df), seenFps, "doc_id", "text"))(
+      StreamRun.memory(queryName, "append"))
     spark.table(queryName)
   }
 
@@ -124,37 +121,29 @@ object IngestStream {
       n: Int = 3, k: Int = 16, r: Int = 4, minJaccard: Double = 1.0,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import graft.ops.Dedup
-    import graft.core.Checkpoints
-    var bands = seenBands.select(col("doc"), col("band_id"),
-      col("band_key")).localCheckpoint()
-    var docs = seenDocs.select(col(idCol), col(textCol)).localCheckpoint()
-    var kept: DataFrame = null
-    StreamRun.boundedForeach(spark, path, schema, maxFilesPerTrigger,
-        pre) { b =>
+    val bands, docs, kept = new Checkpoints.Rotating
+    bands(seenBands.select(col("doc"), col("band_id"), col("band_key")))
+    docs(seenDocs.select(col(idCol), col(textCol)))
+    StreamRun.drain(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger), pre)(
+        StreamRun.eachBatch { b =>
       val batch = b.select(col(idCol), col(textCol))
-      val survivors = Dedup.incrementalNearDup(batch, bands, docs,
-        idCol, textCol, n, k, r, minJaccard)
+      val survivors = Dedup.incrementalNearDup(batch, bands.last.get,
+        docs.last.get, idCol, textCol, n, k, r, minJaccard)
       val survivorDocs = batch.filter(col(textCol).isNotNull)
         .join(survivors.select(col(idCol)), Seq(idCol), "left_semi")
         .localCheckpoint()
-      val nb = bands.unionByName(
-        Dedup.lshBands(Dedup.minhashSignature(survivorDocs, idCol,
-          textCol, n, k), k, r)).localCheckpoint()
-      val nd = docs.unionByName(survivorDocs).localCheckpoint()
-      Checkpoints.release(bands); Checkpoints.release(docs)
+      bands(bands.last.get.unionByName(Dedup.lshBands(
+        Dedup.minhashSignature(survivorDocs, idCol, textCol, n, k), k, r)))
+      docs(docs.last.get.unionByName(survivorDocs))
       Checkpoints.release(survivorDocs)
-      bands = nb; docs = nd
-      val nk = if (kept == null) survivors
-        else {
-          val u = kept.unionByName(survivors).localCheckpoint()
-          Checkpoints.release(kept); Checkpoints.release(survivors)
-          u
-        }
-      kept = nk
-      ()
-    }
-    if (kept != null) kept
-    else seenDocs.select(col(idCol)).limit(0)
+      kept.last match {
+        case None => kept.adopt(survivors)
+        case Some(kd) =>
+          kept(kd.unionByName(survivors)); Checkpoints.release(survivors)
+      }
+    })
+    kept.last.getOrElse(seenDocs.select(col(idCol)).limit(0))
   }
 
   /** Streaming corpus-profile maintenance — the
@@ -172,28 +161,24 @@ object IngestStream {
     * micro-batches. `initial` is the warehouse's existing profile
     * frame ([[graft.ops.Stats.sourceProfile]] schema; pass a
     * `limit(0)` profile to start cold). Per-batch state is two
-    * profile-sized frames, checkpoint-released generationally (the
-    * [[runNearDedupToBatch]] discipline). */
+    * profile-sized frames. */
   def runProfileToBatch(spark: SparkSession, path: String,
       initial: DataFrame, srcCol: String = "source",
       textCol: String = "text", k: Int = 16,
       schema: StructType = docsFileSchema,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import graft.core.Checkpoints
     import graft.ops.Stats
-    var prof = initial.localCheckpoint()
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
+    val prof = new Checkpoints.Rotating
+    prof(initial)
+    StreamRun.drain(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger))(
+        StreamRun.eachBatch { b =>
       val p = Stats.sourceProfile(
         b.select(col(srcCol), col(textCol)), srcCol, textCol,
         size(split(col(textCol), " ")), k)
-      val merged = Stats.mergeProfiles(prof.unionByName(p), srcCol, k)
-        .localCheckpoint()
-      Checkpoints.release(prof)
-      prof = merged
-      ()
-    }
-    prof
+      prof(Stats.mergeProfiles(prof.last.get.unionByName(p), srcCol, k))
+    })
+    prof.last.get
   }
 
   /** STREAMING constraint monitoring — the data-quality face of the
@@ -221,13 +206,14 @@ object IngestStream {
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import graft.verify.Verifier
     val acc = scala.collection.mutable.Map.empty[String, Long]
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
+    StreamRun.drain(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger))(
+        StreamRun.eachBatch { b =>
       Verifier.constraintReport(b, cs).collect().foreach { r =>
         val k = r.getString(0)
         acc(k) = acc.getOrElse(k, 0L) + r.getLong(1)
       }
-    }
+    })
     import spark.implicits._
     // constraint declaration order, not map order — deterministic
     cs.map(c => (c.name, acc.getOrElse(c.name, 0L)))
@@ -246,8 +232,7 @@ object IngestStream {
     * at any batch slicing: a 100 TB warehouse keeps per-source
     * distinct-user counters current per ingest batch with k longs of
     * state per group and no rescan, ever. Per-batch driver-side state
-    * is nothing; the synopsis frame is checkpoint-released
-    * generationally (the [[runProfileToBatch]] discipline).
+    * is nothing. `retainDays`: see [[runCmsByToBatch]].
     *
     * @return (groupCols…, kmv) — feed
     *         [[graft.ops.Sketch.kmvEstimate]] for the count. */
@@ -256,40 +241,25 @@ object IngestStream {
       schema: StructType,
       maxFilesPerTrigger: Option[Int] = None,
       retainDays: Option[Int] = None): DataFrame = {
-    import graft.core.Checkpoints
     import graft.ops.Sketch
     require(retainDays.isEmpty || groupCols.size == 1,
       "runKmvToBatch: retainDays needs exactly one (day) group column")
-    var syn = Option.empty[DataFrame]
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
-      if (!b.isEmpty) {
-        val p = Sketch.kmvSynopsis(b, valueCol, k, groupCols)
-        val merged = compactToNewestDays(
-          syn.map(s => Sketch.mergeKmvSynopses(k, groupCols, s, p))
-            .getOrElse(p), groupCols.headOption.orNull, retainDays)
-          .localCheckpoint()
-        syn.foreach(Checkpoints.release)
-        syn = Some(merged)
-      }
-    }
-    syn.getOrElse {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(groupCols.map(c => schema(c)) :+
-          StructField("kmv", ArrayType(LongType, containsNull = false))))
-    }
+    StreamRun.fold(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger),
+        Sketch.kmvSynopsis(_, valueCol, k, groupCols),
+        Sketch.mergeKmvSynopses(k, groupCols, _, _),
+        groupCols.headOption, retainDays)
+      .getOrElse(StreamRun.empty(spark, groupCols.map(c => schema(c)) :+
+        StructField("kmv", ArrayType(LongType, containsNull = false))))
   }
 
   /** STREAMING SCD2 maintenance — the dimension-history face of the
     * incremental family: each micro-batch of dim updates folds into
     * the running SCD2 table via [[graft.ops.Scd.scd2Merge]], so the
     * warehouse's version history is current per ingest batch instead
-    * of per nightly rebuild. Per-batch state is the dim itself,
-    * checkpoint-released generationally (the [[runProfileToBatch]]
-    * discipline); the merge cost per batch is scd2Merge's single
-    * equi-join of the OPEN slice with the batch.
+    * of per nightly rebuild. Per-batch state is the dim itself; the
+    * merge cost per batch is scd2Merge's single equi-join of the OPEN
+    * slice with the batch.
     *
     * The SCD2 fold is ORDER-DEPENDENT (a key updated in two batches
     * gets two chained versions), unlike the profile/constraint folds —
@@ -305,20 +275,19 @@ object IngestStream {
       initial: DataFrame, keyCol: String, trackedCols: Seq[String],
       effectiveDateAt: Long => String, schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import graft.core.Checkpoints
-    var cur = initial.localCheckpoint()
+    val cur = new Checkpoints.Rotating
+    cur(initial)
     var i = 0L
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
+    StreamRun.drain(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger))(
+        StreamRun.eachBatch { b =>
       if (!b.isEmpty) {
-        val merged = graft.ops.Scd.scd2Merge(cur, b, keyCol,
-          trackedCols, effectiveDateAt(i)).localCheckpoint()
-        Checkpoints.release(cur)
-        cur = merged
+        cur(graft.ops.Scd.scd2Merge(cur.last.get, b, keyCol,
+          trackedCols, effectiveDateAt(i)))
         i += 1
       }
-    }
-    cur
+    })
+    cur.last.get
   }
 
   /** OUT-OF-ORDER-tolerant streaming SCD2 — [[runScd2ToBatch]] with a
@@ -340,39 +309,33 @@ object IngestStream {
     * join already assumes per batch.
     *
     * Scale shape: the buffer is a lateness window of updates (never
-    * history-sized), checkpoint-released generationally; per-batch
-    * driver data is one max-date scalar plus the ≤ window-days flush
-    * date list; each flush date costs scd2Merge's single open⋈batch
-    * equi-join. */
+    * history-sized); per-batch driver data is one max-date scalar
+    * plus the ≤ window-days flush date list; each flush date costs
+    * scd2Merge's single open⋈batch equi-join. */
   def runScd2ToBatchReordered(spark: SparkSession, path: String,
       initial: DataFrame, keyCol: String, trackedCols: Seq[String],
       dateCol: String, latenessDays: Int, schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import graft.core.Checkpoints
     require(latenessDays >= 0,
       s"latenessDays must be non-negative: $latenessDays")
-    var cur = initial.localCheckpoint()
-    var pending = Option.empty[DataFrame]
+    val cur, pending = new Checkpoints.Rotating
+    cur(initial)
     var maxSeen = Option.empty[String]
     var mergedThrough = Option.empty[String]
 
     // fold every pending row with date <= upTo into the dimension,
     // ascending; retain the rest
-    def flush(upTo: String): Unit = pending.foreach { p =>
+    def flush(upTo: String): Unit = pending.last.foreach { p =>
       val ripe = p.filter(col(dateCol) <= upTo)
       val dates = ripe.select(col(dateCol)).distinct()
         .collect().map(_.getString(0)).sorted
       if (dates.nonEmpty) {
         dates.foreach { d =>
-          val merged = graft.ops.Scd.scd2Merge(cur,
+          cur(graft.ops.Scd.scd2Merge(cur.last.get,
             ripe.filter(col(dateCol) === d).drop(dateCol),
-            keyCol, trackedCols, d).localCheckpoint()
-          Checkpoints.release(cur)
-          cur = merged
+            keyCol, trackedCols, d))
         }
-        val rest = p.filter(col(dateCol) > upTo).localCheckpoint()
-        Checkpoints.release(p)
-        pending = Some(rest)
+        pending(p.filter(col(dateCol) > upTo))
         // the drop line is the highest MERGED date, not the watermark:
         // a late arrival between the two is still safe to accept (it
         // folds after every already-merged date)
@@ -380,8 +343,9 @@ object IngestStream {
       }
     }
 
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
+    StreamRun.drain(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger))(
+        StreamRun.eachBatch { b =>
       if (!b.isEmpty) {
         val fresh0 = b.select(
           (keyCol +: trackedCols :+ dateCol).map(col): _*)
@@ -392,18 +356,28 @@ object IngestStream {
         val bMax = b.agg(max(col(dateCol))).collect().head.getString(0)
         maxSeen = Some(maxSeen.fold(bMax)(m =>
           if (bMax > m) bMax else m))
-        val p2 = pending.fold(fresh)(_.unionByName(fresh))
-          .localCheckpoint()
-        pending.foreach(Checkpoints.release)
-        pending = Some(p2)
+        pending(pending.last.fold(fresh)(_.unionByName(fresh)))
         flush(java.time.LocalDate.parse(maxSeen.get)
           .minusDays(latenessDays.toLong).toString)
       }
-    }
+    })
     flush("9999-12-31") // stream closed: drain the buffer
-    pending.foreach(Checkpoints.release)
-    cur
+    pending.releaseLast()
+    cur.last.get
   }
+
+  /** The (r, bucket, c) cells of a CMS grid, and with `level` in front
+    * a rank grid's — the empty results of their folds. */
+  private val cmsCell = Seq(StructField("r", IntegerType, nullable = false),
+    StructField("bucket", LongType), StructField("c", LongType))
+  private val rankCell =
+    StructField("level", IntegerType, nullable = false) +: cmsCell
+
+  /** Per-`_day` rank grids of a micro-batch (`day` resolved on it). */
+  private def rankGridByDay(value: Column, day: Column, depth: Int,
+      width: Int): DataFrame => DataFrame = b =>
+    graft.ops.Sketch.rankGridBy(b.withColumn("_day", day), value,
+      Seq("_day"), depth, width)
 
   /** STREAMING CMS maintenance — the frequency face of the synopsis
     * trio's streaming story (KMV = [[runKmvToBatch]], rank grid =
@@ -415,33 +389,20 @@ object IngestStream {
     * streamed grid equals the batch grid over everything ingested,
     * bit for bit, at any batch slicing: a 100 TB warehouse keeps its
     * token-frequency sketch current per ingest batch with
-    * depth·width longs of state and no rescan, ever. The grid frame
-    * is checkpoint-released generationally (the [[runProfileToBatch]]
-    * discipline); per-batch driver-side state is nothing.
+    * depth·width longs of state and no rescan, ever; per-batch
+    * driver-side state is nothing.
     *
     * @return the folded (r, bucket, c) grid — probe it for estimates
     *         exactly as a batch-built table. */
   def runCmsToBatch(spark: SparkSession, path: String,
       textCol: String, depth: Int, width: Int, schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import graft.core.Checkpoints
     import graft.ops.Sketch
-    var grid = Option.empty[DataFrame]
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
-      if (!b.isEmpty) {
-        val p = Sketch.cmsTable(b, textCol, depth, width)
-        val merged = grid.map(g => Sketch.mergeCmsTables(g, p))
-          .getOrElse(p).localCheckpoint()
-        grid.foreach(Checkpoints.release)
-        grid = Some(merged)
-      }
-    }
-    grid.getOrElse(spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(StructField("r", IntegerType, nullable = false),
-        StructField("bucket", LongType),
-        StructField("c", LongType)))))
+    StreamRun.fold(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger),
+        Sketch.cmsTable(_, textCol, depth, width),
+        Sketch.mergeCmsTables(_, _))
+      .getOrElse(StreamRun.empty(spark, cmsCell))
   }
 
   /** [[runCmsToBatch]] under a group key (e.g. a staged day column) —
@@ -450,15 +411,6 @@ object IngestStream {
     * maintained cells via the grouped cell-wise merge; same additive
     * algebra, so the streamed grouped grid IS the batch `cmsTableBy`
     * bit for bit at any slicing. State: groups×depth·width cells.
-    *
-    * RETENTION: the returned frame IS the fold's final localCheckpoint
-    * (true of the whole run*ToBatch family) — its groups×cells
-    * executor blocks stay persisted until the caller passes it to
-    * [[graft.core.Checkpoints.release]], AFTER everything derived
-    * from it is materialized (release-before-use throws). The catalog
-    * queries retain it for the query's lifetime by design: the state
-    * is synopsis-sized (days×cells here, never history-sized), and
-    * each invocation strands at most one grid.
     *
     * `retainDays = Some(n)` bounds the state HORIZON too: after each
     * fold step only the newest `n` distinct day keys survive (the
@@ -472,26 +424,13 @@ object IngestStream {
       schema: StructType,
       maxFilesPerTrigger: Option[Int] = None,
       retainDays: Option[Int] = None): DataFrame = {
-    import graft.core.Checkpoints
     import graft.ops.Sketch
-    var grid = Option.empty[DataFrame]
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
-      if (!b.isEmpty) {
-        val p = Sketch.cmsTableBy(b, textCol, groupCol, depth, width)
-        val merged = compactToNewestDays(
-          grid.map(g => Sketch.mergeCmsTablesBy(Seq(groupCol), g, p))
-            .getOrElse(p), groupCol, retainDays).localCheckpoint()
-        grid.foreach(Checkpoints.release)
-        grid = Some(merged)
-      }
-    }
-    grid.getOrElse(spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(schema(groupCol),
-        StructField("r", IntegerType, nullable = false),
-        StructField("bucket", LongType),
-        StructField("c", LongType)))))
+    StreamRun.fold(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger),
+        Sketch.cmsTableBy(_, textCol, groupCol, depth, width),
+        Sketch.mergeCmsTablesBy(Seq(groupCol), _, _),
+        Some(groupCol), retainDays)
+      .getOrElse(StreamRun.empty(spark, schema(groupCol) +: cmsCell))
   }
 
   /** STREAMING rank-grid maintenance — the quantile face of the
@@ -513,25 +452,11 @@ object IngestStream {
   def runRankGridToBatch(spark: SparkSession, path: String,
       value: Column, depth: Int, width: Int, schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import graft.core.Checkpoints
     import graft.ops.Sketch
-    var grid = Option.empty[DataFrame]
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
-      if (!b.isEmpty) {
-        val p = Sketch.rankGrid(b, value, depth, width)
-        val merged = grid.map(g => Sketch.mergeRankGrids(g, p))
-          .getOrElse(p).localCheckpoint()
-        grid.foreach(Checkpoints.release)
-        grid = Some(merged)
-      }
-    }
-    grid.getOrElse(spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(StructField("level", IntegerType, nullable = false),
-        StructField("r", IntegerType, nullable = false),
-        StructField("bucket", LongType),
-        StructField("c", LongType)))))
+    StreamRun.fold(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger),
+        Sketch.rankGrid(_, value, depth, width), Sketch.mergeRankGrids(_, _))
+      .getOrElse(StreamRun.empty(spark, rankCell))
   }
 
   /** [[runRankGridToBatch]] grouped on a derived day — the streaming
@@ -556,28 +481,13 @@ object IngestStream {
       schema: StructType,
       maxFilesPerTrigger: Option[Int] = None,
       retainDays: Option[Int] = None): DataFrame = {
-    import graft.core.Checkpoints
-    import graft.ops.Sketch
-    var grid = Option.empty[DataFrame]
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
-      if (!b.isEmpty) {
-        val p = Sketch.rankGridBy(b.withColumn("_day", day), value,
-          Seq("_day"), depth, width)
-        val merged = compactToNewestDays(
-          grid.map(g => Sketch.mergeRankGridsBy(Seq("_day"), g, p))
-            .getOrElse(p), "_day", retainDays).localCheckpoint()
-        grid.foreach(Checkpoints.release)
-        grid = Some(merged)
-      }
-    }
-    grid.getOrElse(spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(StructField("_day", DateType),
-        StructField("level", IntegerType, nullable = false),
-        StructField("r", IntegerType, nullable = false),
-        StructField("bucket", LongType),
-        StructField("c", LongType)))))
+    StreamRun.fold(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger),
+        rankGridByDay(value, day, depth, width),
+        graft.ops.Sketch.mergeRankGridsBy(Seq("_day"), _, _),
+        Some("_day"), retainDays)
+      .getOrElse(StreamRun.empty(spark,
+        StructField("_day", DateType) +: rankCell))
   }
 
   /** [[runRankGridByToBatch]] writing THROUGH the warehouse sink —
@@ -600,29 +510,12 @@ object IngestStream {
       sinkPath: String, value: Column, day: Column, depth: Int,
       width: Int, schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): Unit = {
-    import graft.core.Checkpoints
-    import graft.ops.Sketch
-    var grid = Option.empty[DataFrame]
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
-      if (!b.isEmpty) {
-        val p = Sketch.rankGridBy(b.withColumn("_day", day), value,
-          Seq("_day"), depth, width)
-        val merged = grid
-          .map(g => Sketch.mergeRankGridsBy(Seq("_day"), g, p))
-          .getOrElse(p).localCheckpoint()
-        // the days THIS batch touched, re-landed whole from the
-        // merged state (the batch's own grid is day-complete only
-        // for days it alone covers; the merged slice always is)
-        val touched = p.select(col("_day")).distinct()
-        graft.write.PartitionedWriter.overwriteDays(
-          merged.join(broadcast(touched), Seq("_day"), "left_semi"),
-          sinkPath, "_day")
-        grid.foreach(Checkpoints.release)
-        grid = Some(merged)
-      }
-    }
-    grid.foreach(Checkpoints.release)
+    StreamRun.fold(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger),
+        rankGridByDay(value, day, depth, width),
+        graft.ops.Sketch.mergeRankGridsBy(Seq("_day"), _, _),
+        Some("_day"), landTo = Some(sinkPath))
+      .foreach(Checkpoints.release)
   }
 
   /** [[runCmsByToBatch]] writing THROUGH the warehouse sink — the CMS
@@ -642,25 +535,13 @@ object IngestStream {
       sinkPath: String, textCol: String, groupCol: String, depth: Int,
       width: Int, schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): Unit = {
-    import graft.core.Checkpoints
     import graft.ops.Sketch
-    var grid = Option.empty[DataFrame]
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
-      if (!b.isEmpty) {
-        val p = Sketch.cmsTableBy(b, textCol, groupCol, depth, width)
-        val merged = grid
-          .map(g => Sketch.mergeCmsTablesBy(Seq(groupCol), g, p))
-          .getOrElse(p).localCheckpoint()
-        val touched = p.select(col(groupCol)).distinct()
-        graft.write.PartitionedWriter.overwriteDays(
-          merged.join(broadcast(touched), Seq(groupCol), "left_semi"),
-          sinkPath, groupCol)
-        grid.foreach(Checkpoints.release)
-        grid = Some(merged)
-      }
-    }
-    grid.foreach(Checkpoints.release)
+    StreamRun.fold(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger),
+        Sketch.cmsTableBy(_, textCol, groupCol, depth, width),
+        Sketch.mergeCmsTablesBy(Seq(groupCol), _, _),
+        Some(groupCol), landTo = Some(sinkPath))
+      .foreach(Checkpoints.release)
   }
 
   /** [[runKmvToBatch]] (day-grouped) writing THROUGH the warehouse
@@ -678,25 +559,13 @@ object IngestStream {
       sinkPath: String, valueCol: String, k: Int, dayCol: String,
       schema: StructType,
       maxFilesPerTrigger: Option[Int] = None): Unit = {
-    import graft.core.Checkpoints
     import graft.ops.Sketch
-    var syn = Option.empty[DataFrame]
-    StreamRun.boundedForeach(spark, path, schema,
-        maxFilesPerTrigger) { b =>
-      if (!b.isEmpty) {
-        val p = Sketch.kmvSynopsis(b, valueCol, k, Seq(dayCol))
-        val merged = syn
-          .map(s => Sketch.mergeKmvSynopses(k, Seq(dayCol), s, p))
-          .getOrElse(p).localCheckpoint()
-        val touched = p.select(col(dayCol)).distinct()
-        graft.write.PartitionedWriter.overwriteDays(
-          merged.join(broadcast(touched), Seq(dayCol), "left_semi"),
-          sinkPath, dayCol)
-        syn.foreach(Checkpoints.release)
-        syn = Some(merged)
-      }
-    }
-    syn.foreach(Checkpoints.release)
+    StreamRun.fold(spark,
+        StreamRun.Source(path, schema, maxFilesPerTrigger),
+        Sketch.kmvSynopsis(_, valueCol, k, Seq(dayCol)),
+        Sketch.mergeKmvSynopses(k, Seq(dayCol), _, _),
+        Some(dayCol), landTo = Some(sinkPath))
+      .foreach(Checkpoints.release)
   }
 
   /** The trained quality gate DEPLOYED ON INGEST — the classifier's
@@ -714,73 +583,13 @@ object IngestStream {
   def runClassifierGateToBatch(spark: SparkSession, path: String,
       weights: Seq[(Int, Long)], buckets: Int,
       queryName: String): DataFrame = {
-    StreamRun.bounded(spark, path, readDocs,
+    StreamRun.bounded(spark, path, docsFileSchema,
       df => df.filter(col("text").isNotNull)
         .select(col("doc_id"),
           graft.ops.Classifier.scoreExpr(col("text"), weights,
             buckets).as("score"))
-        .withColumn("kept", col("score") > 0)) { out =>
-      out.writeStream.format("memory").queryName(queryName)
-        .outputMode("append")
-    }
+        .withColumn("kept", col("score") > 0))(
+      StreamRun.memory(queryName, "append"))
     spark.table(queryName)
-  }
-}
-
-/** Shared bounded-run scaffolding for file-source streaming twins:
-  * stage the single parquet file into a directory (FileStreamSource
-  * requires one), drop shuffle partitions to 8 for the run (each
-  * shuffle partition owns a state store; fixed per-store setup
-  * dominates a bounded local run), drain, restore, clean up. The
-  * [[EventsStream]] runners share this via their own reader. */
-private[streaming] object StreamRun {
-  def bounded(spark: SparkSession, path: String,
-      read: (SparkSession, String) => DataFrame,
-      pipeline: DataFrame => DataFrame)(
-      sink: DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row]): Unit = {
-    val src = java.nio.file.Paths.get(path)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
-    java.nio.file.Files.copy(src, dir.resolve(src.getFileName))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = sink(pipeline(read(spark, dir.toString))).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.core.Fs.deleteRecursively(dir)
-    }
-  }
-
-  /** Bounded foreachBatch drain over a parquet file-stream directory —
-    * the shared scaffolding for the evolving-state ingest loops
-    * (near-dup, profile): same shuffle-partition discipline as
-    * [[bounded]] (8 for the run — each shuffle partition owns a state
-    * store), optional per-trigger file cap for deterministic
-    * multi-batch sequencing, drained to completion, conf restored. */
-  def boundedForeach(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType,
-      maxFilesPerTrigger: Option[Int],
-      pre: DataFrame => DataFrame = identity)(
-      fn: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]
-        => Unit): Unit = {
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val reader = spark.readStream.schema(schema)
-      val src = maxFilesPerTrigger
-        .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-        .parquet(path)
-      val q = pre(src).writeStream
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], _: Long) => fn(b) }
-        .outputMode("update").start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
   }
 }

@@ -151,31 +151,17 @@ object Sessionize {
     FunnelStream.withDrainStaging(spark, path,
         drainAdvanceUs = (latenessMs + gapMs + 2000L) * 1000L) { staged =>
       val qn = s"graft_sessooo_${System.nanoTime()}"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sockpt")
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val reader = spark.readStream
-          .schema(EventsStream.eventsFileSchema)
-        val src = maxFilesPerTrigger
-          .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-          .parquet(staged)
-        val q = sessionizeReordered(src.toDF(), gapMs, latenessMs)
-          .toDF()
-          .writeStream.format("memory").queryName(qn)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        graft.core.Fs.deleteRecursively(ckpt)
-      }
-      spark.table(qn)
+      StreamRun.drain(spark, StreamRun.Source(staged,
+          EventsStream.eventsFileSchema, maxFilesPerTrigger),
+        sessionizeReordered(_, gapMs, latenessMs).toDF())(
+        StreamRun.memory(qn, "append"))
+      // the memory sink's view holds every row until dropped
+      try spark.table(qn)
         .filter(col("user_id") =!= FunnelStream.SentinelUser)
         .select(col("user_id"), col("start_ms"), col("end_ms"),
           col("n_events"))
         .localCheckpoint()
+      finally spark.catalog.dropTempView(qn)
     }
   }
 

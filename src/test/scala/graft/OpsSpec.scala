@@ -1678,65 +1678,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally graft.core.Fs.deleteRecursively(staged.toFile)
   }
 
-  test("file-sink dedup run equals batch DISTINCT (no driver transit)") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_sink_dedup").toString
-    val stream = graft.streaming.EventsStream
-      .runToFiles(spark, s"$sf/events.parquet", out,
-        graft.streaming.EventsStream.dedupKeys)
-      .collect().map(_.getLong(0)).toSet
-    val batch = Tables.df(spark, sf, "events")
-      .select("user_id").distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(stream == batch)
-  }
-
-  test("file-sink windowed agg emits exactly the finalized windows") {
-    import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_sink_agg").toString
-    val stream = graft.streaming.EventsStream
-      .runToFiles(spark, s"$sf/events.parquet", out,
-        graft.streaming.EventsStream.windowedAgg)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getDecimal(3).toString)).toSet
-    // append mode finalizes a window once window.end <= watermark =
-    // max(ts) - 10min; the bounded run leaves trailing windows in state
-    val maxTs = Tables.df(spark, sf, "events")
-      .agg(max(date_trunc("second", col("ts"))))
-      .collect()(0).getTimestamp(0).getTime
-    val horizonMs = maxTs - 10 * 60 * 1000
-    val batchFinal = graft.queries.Catalog.byName("q_time_window_agg")
-      .fn(spark, sf)
-      .filter(unix_timestamp(col("window_start"),
-        "yyyy-MM-dd HH:mm:ss").cast("long") * 1000 +
-        5 * 60 * 1000 <= horizonMs)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getString(3))).toSet
-    assert(stream.nonEmpty, "file sink emitted no finalized windows")
-    assert(stream == batchFinal)
-  }
-
-  test("file-sink interval join equals memory-sink run (sink parity)") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_sink_ivj").toString
-    val files = graft.streaming.EventsStream
-      .runToFiles(spark, s"$sf/events.parquet", out,
-        graft.streaming.EventsStream.viewClickJoin)
-      .select("user_id", "view_id", "click_id", "view_us", "click_us")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
-    val mem = graft.streaming.EventsStream
-      .runViewClickToBatch(spark, s"$sf/events.parquet", "spec_ivj_parity")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
-    assert(files.nonEmpty && files == mem)
-  }
-
   test("stream-stream interval join equals batch interval join") {
     import org.apache.spark.sql.functions._
     val stream = graft.streaming.EventsStream
