@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Eager release of localCheckpoint'd frames.
@@ -25,6 +26,16 @@ import org.apache.spark.sql.execution.LogicalRDD
 object Checkpoints {
   def release(df: DataFrame): Unit =
     rddsOf(df).foreach(_.unpersist(blocking = false))
+
+  /** `df` local-checkpointed, with its row count delivered by the SAME
+    * job: an [[Observation]] on the checkpoint's plan, instead of a
+    * `count()` afterwards — a second job (two under AQE) that only
+    * re-scans what the checkpoint just wrote. */
+  def counted(df: DataFrame): (DataFrame, Long) = {
+    val o = Observation()
+    val cp = df.observe(o, count(lit(1)).as("n")).localCheckpoint()
+    (cp, o.get("n").asInstanceOf[Long])
+  }
 
   /** The checkpointed RDDs `ds`'s analyzed plan reads. */
   def rddsOf(ds: Dataset[_]): Seq[org.apache.spark.rdd.RDD[_]] =

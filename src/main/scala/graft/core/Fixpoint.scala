@@ -73,6 +73,17 @@ object Fixpoint {
     * Pass false for loops that join |V|-sized state against a
     * [[Scope.layout]] (see there for why that plan wins).
     *
+    * The runtime bloom filter is off inside the scope. A checkpoint's
+    * `LogicalRDD` carries its origin plan's size ESTIMATE, and a
+    * join's estimate is the product of its sides', so a round-state
+    * checkpoint reads as hundreds of GB to the planner however few
+    * rows it holds. With broadcast off that makes every state scan a
+    * bloom-filter application side: the optimizer builds a
+    * `might_contain` filter from the other join side (a checkpoint
+    * whose inherited origin constraints look like a selective filter)
+    * in its own subquery job — one more driver job per round, to
+    * prune rows the join itself drops right after.
+    *
     * When the scope closes — normally or by an exception — every
     * layout and every rotating state's last checkpoint is released,
     * except checkpoints the frame `body` returns still reads: those
@@ -83,10 +94,13 @@ object Fixpoint {
       s"Fixpoint.scope: bad partition count $partitions")
     val kp = "spark.sql.shuffle.partitions"
     val kb = "spark.sql.autoBroadcastJoinThreshold"
+    val kf = "spark.sql.optimizer.runtime.bloomFilter.enabled"
     val pp = spark.conf.get(kp)
     val pb = spark.conf.get(kb)
+    val pf = spark.conf.get(kf)
     spark.conf.set(kp, partitions.toString)
     if (!allowBroadcast) spark.conf.set(kb, "-1")
+    spark.conf.set(kf, "false")
     val s = new Scope(partitions)
     var out: Option[T] = None
     try {
@@ -94,7 +108,7 @@ object Fixpoint {
       out.get
     } finally {
       s.close(out)
-      spark.conf.set(kp, pp); spark.conf.set(kb, pb)
+      spark.conf.set(kp, pp); spark.conf.set(kb, pb); spark.conf.set(kf, pf)
     }
   }
 

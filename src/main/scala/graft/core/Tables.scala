@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loader for the driver-generated TPC-H-ish testdata
   * (`/root/testdata/sf*`, see /root/repo/TESTDATA.md). One parquet file
@@ -15,8 +17,48 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The session confs that change what parquet schema inference
+    * returns for the same file. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  /** (canonical path, inference confs) -> (length, mtime, schema). */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[String]), (Long, Long, StructType)]()
+
+  /** `path`'s inferred parquet schema, inferred once per JVM for each
+    * (file, inference confs): `spark.read.parquet` runs a Spark job
+    * to read the footers on EVERY call — the largest share of a short
+    * catalog query's driver floor. A rewritten file (new length or
+    * mtime) is inferred again. Only the schema is memoized: each call
+    * still builds a fresh relation, so self-joins keep distinct
+    * exprIds. */
+  private[graft] def schemaOf(spark: SparkSession, path: String)
+      : StructType = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val q = st.getPath.toUri
+    val canonical =
+      if (q.getScheme == "file") new java.io.File(q).getCanonicalPath
+      else q.toString
+    val key = (canonical, inferenceConfs.map(spark.conf.get))
+    Option(schemas.get(key)) match {
+      case Some((len, mtime, s))
+          if len == st.getLen && mtime == st.getModificationTime => s
+      case _ =>
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, (st.getLen, st.getModificationTime, s))
+        s
+    }
+  }
+
   def df(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val raw = spark.read.schema(schemaOf(spark, path)).parquet(path)
     // events.ts has shifted parquet flavor across generator versions:
     // TIMESTAMP(NANOS) (readable only as long via
     // spark.sql.legacy.parquet.nanosAsLong) and TIMESTAMP(MICROS,
@@ -37,10 +79,12 @@ object Tables {
     else raw
   }
 
-  /** Register every table as a temp view so operators can mix the
-    * DataFrame API with `spark.sql`. Cheap (lazy plans, no scan). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => df(spark, sfDir, n).createOrReplaceTempView(n))
+  /** Register `tables` (default: every table) as temp views so
+    * operators can mix the DataFrame API with `spark.sql`. Cheap: lazy
+    * plans, and no job once each file's schema is memoized. */
+  def registerAll(spark: SparkSession, sfDir: String,
+      tables: Seq[String] = names): Unit =
+    tables.foreach(n => df(spark, sfDir, n).createOrReplaceTempView(n))
 }
 
 /** Small filesystem helpers shared by the harnesses (Bench warmup,

@@ -54,8 +54,8 @@ object Graph {
     *                  the ids appearing in the edge list — pass it when
     *                  isolated nodes must still receive teleport mass
     * @param nNodesOpt precomputed `nodesOpt.count()` — pass it when the
-    *                  caller already counted the universe, so the seed
-    *                  mass split doesn't re-run a corpus COUNT job
+    *                  caller already counted the universe: the universe
+    *                  is then neither counted nor checkpointed again
     * @return (node, rank) — rank in integer mass units. The returned
     *         frame IS the final round's local checkpoint (|V| rows of
     *         executor-resident data, O(1)-deep plan); every
@@ -65,7 +65,7 @@ object Graph {
       iterations: Int = 8, dampingPct: Int = 85,
       scale: Long = 1000000L, nodesOpt: Option[DataFrame] = None,
       nNodesOpt: Option[Long] = None): DataFrame = {
-    val (nodes, eDeg, p, nNodes) =
+    val (nodes, prepNodes, eDeg, p, nNodes) =
       prepare(edges, srcCol, dstCol, nodesOpt, nNodesOpt)
     require(nNodes > 0, "pageRank: empty graph")
     val r0 = scale / nNodes
@@ -73,7 +73,7 @@ object Graph {
     Fixpoint.scope(edges.sparkSession, p, allowBroadcast = false) { loop =>
       powerIterate(loop,
         nodes.select(col("node"), lit(base).as("base"), lit(r0).as("r0")),
-        eDeg, iterations, dampingPct, nodes)
+        eDeg, iterations, dampingPct, prepNodes)
     }
   }
 
@@ -94,7 +94,8 @@ object Graph {
       seeds: DataFrame, iterations: Int = 8, dampingPct: Int = 85,
       scale: Long = 1000000L, nodesOpt: Option[DataFrame] = None)
       : DataFrame = {
-    val (nodes, eDeg, p, _) = prepare(edges, srcCol, dstCol, nodesOpt)
+    val (nodes, prepNodes, eDeg, p, _) =
+      prepare(edges, srcCol, dstCol, nodesOpt)
     val s = seeds.toDF("node")
       .select(col("node").cast("long").as("node")).distinct()
       .join(nodes, Seq("node"), "left_semi")
@@ -109,7 +110,7 @@ object Graph {
           .select(col("node"),
             when(col("_seed"), lit(base)).otherwise(lit(0L)).as("base"),
             when(col("_seed"), lit(r0)).otherwise(lit(0L)).as("r0")),
-        eDeg, iterations, dampingPct, nodes)
+        eDeg, iterations, dampingPct, prepNodes)
     }
   }
 
@@ -161,17 +162,11 @@ object Graph {
       nodesOpt: Option[DataFrame] = None,
       nNodesOpt: Option[Long] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint()
-    require(!e.isEmpty, "hits: empty edge list")
-    val nodes = nodesOpt
-      .map(_.toDF("node").select(col("node").cast("long").as("node")))
-      .getOrElse(e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
-      .localCheckpoint()
-    val nNodes = nNodesOpt.filter(_ => nodesOpt.isDefined)
-      .getOrElse(nodes.count())
-    val p = Fixpoint.loopPartitionsOf(math.max(e.count(), nNodes))
+    val (e, nEdges) = Checkpoints.counted(edges.select(
+      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
+    require(nEdges > 0, "hits: empty edge list")
+    val (nodes, prepNodes, nNodes) = universe(e, nodesOpt, nNodesOpt)
+    val p = Fixpoint.loopPartitionsOf(math.max(nEdges, nNodes))
     val r0 = scale / nNodes
     require(r0 > 0, s"hits: scale $scale must be >= node count $nNodes")
     // degrees are loop-invariant: fold them onto the state frame ONCE
@@ -190,7 +185,7 @@ object Graph {
         coalesce(col("od"), lit(0L)).as("od"),
         coalesce(col("id"), lit(0L)).as("id"))
       .localCheckpoint()
-    Checkpoints.release(nodes)
+    prepNodes.foreach(Checkpoints.release)
     Fixpoint.scope(edges.sparkSession, p, allowBroadcast = false) { loop =>
     // the edge list laid out by EACH join key: both per-round state
     // joins ride a layout
@@ -349,15 +344,15 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1: $k")
-    val und = edges
+    // consumed once, by the adjacency build
+    val (und, nUnd) = Checkpoints.counted(edges
       .select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .localCheckpoint() // consumed once, by the adjacency build
-    val p = Fixpoint.loopPartitionsOf(und.count())
+      .distinct())
+    val p = Fixpoint.loopPartitionsOf(nUnd)
     Fixpoint.scope(edges.sparkSession, p, allowBroadcast = false) { loop =>
     val rotate = loop.rotating()
     // adjacency in both directions, laid out by the REMOVED-side key:
@@ -423,50 +418,71 @@ object Graph {
   }
 
   /** Shared setup: normalized edge list with out-degree folded on +
-    * the node universe, both checkpointed ONCE (the one-shot
-    * unknown-cardinality joins run under the ambient AQE session —
-    * sizing those is what AQE is for), plus the loop-sized partition
-    * count p off the materialized invariants' counts. The loop itself
-    * runs in a [[Fixpoint.scope]] of p partitions: every per-round
-    * exchange is p-partitioned and the rounds between checkpoints run
-    * as one job. (Local checkpoints taken under AQE do NOT preserve
+    * the node universe ([[universe]]), each checkpointed ONCE with its
+    * count delivered by the same job ([[Checkpoints.counted]]; the
+    * one-shot unknown-cardinality joins run under the ambient AQE
+    * session — sizing those is what AQE is for), plus the loop-sized
+    * partition count p off the materialized invariants' counts. The
+    * loop itself runs in a [[Fixpoint.scope]] of p partitions: every
+    * per-round exchange is p-partitioned and the rounds between
+    * checkpoints run as one job. (Local checkpoints taken under AQE do NOT preserve
     * physical partitioning in Spark 4.1 — a `Scan ExistingRDD` plans with
     * UnknownPartitioning, verified against the executed plan — so
     * there is deliberately no repartition-before-checkpoint here: it
     * would buy nothing and cost an |E| exchange.)
-    * @return (nodes, eDeg, p, nNodes) */
+    * @return (nodes, prepNodes, eDeg, p, nNodes) — see [[universe]]
+    *         for `nodes` and `prepNodes` */
   private def prepare(edges: DataFrame, srcCol: String, dstCol: String,
       nodesOpt: Option[DataFrame], nNodesOpt: Option[Long] = None)
-      : (DataFrame, DataFrame, Int, Long) = {
+      : (DataFrame, Option[DataFrame], DataFrame, Int, Long) = {
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val nodes0 = nodesOpt
-      .map(_.toDF("node").select(col("node").cast("long").as("node")))
-      .getOrElse(e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
-      .localCheckpoint()
+    val (nodes, prepNodes, nNodes) = universe(e, nodesOpt, nNodesOpt)
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val eDeg0 = e.join(deg, "src").localCheckpoint()
-    // a caller-supplied count only applies to a caller-supplied
-    // universe (the derived src∪dst universe has no caller count)
-    val nNodes = nNodesOpt.filter(_ => nodesOpt.isDefined)
-      .getOrElse(nodes0.count())
-    val p = Fixpoint.loopPartitionsOf(math.max(eDeg0.count(), nNodes))
-    (nodes0, eDeg0, p, nNodes)
+    val (eDeg, nEdges) = Checkpoints.counted(e.join(deg, "src"))
+    (nodes, prepNodes, eDeg,
+      Fixpoint.loopPartitionsOf(math.max(nEdges, nNodes)), nNodes)
+  }
+
+  /** The node universe of the (src, dst) edge list `e` and its count.
+    * A caller that passes both its universe and that universe's count
+    * gets its own frame back unmaterialized: its one consumer (the
+    * loop's seed-state checkpoint) reads it once, so a checkpoint of
+    * it would be a job that saves nothing. Otherwise the universe
+    * (caller's or src∪dst) is checkpointed and counted in one job.
+    * A caller-supplied count only applies to a caller-supplied
+    * universe (the derived src∪dst universe has no caller count).
+    * @return (nodes, prepNodes, nNodes) — `prepNodes` is the
+    *         checkpoint made HERE, the only one the caller may
+    *         release: the caller's universe may itself read a
+    *         checkpoint its owner still needs. */
+  private def universe(e: DataFrame, nodesOpt: Option[DataFrame],
+      nNodesOpt: Option[Long]): (DataFrame, Option[DataFrame], Long) = {
+    val given = nodesOpt
+      .map(_.toDF("node").select(col("node").cast("long").as("node")))
+    (given, nNodesOpt) match {
+      case (Some(nodes), Some(n)) => (nodes, None, n)
+      case _ =>
+        val (cp, n) = Checkpoints.counted(given.getOrElse(
+          e.select(col("src").as("node"))
+            .union(e.select(col("dst").as("node"))).distinct()))
+        (cp, Some(cp), n)
+    }
   }
 
   /** The fixed-point power loop over a per-node (base, r0) seeding —
     * constant for PageRank, seed-gated for TrustRank. `prepNodes` is
-    * [[prepare]]'s universe checkpoint, released as soon as the seeded
-    * frame (which subsumes it) is materialized. */
+    * [[prepare]]'s own universe checkpoint, if it made one, released
+    * as soon as the seeded frame (which subsumes it) is materialized;
+    * the caller's universe is never released here. */
   private def powerIterate(loop: Fixpoint.Scope, seeded: DataFrame,
       eDeg: DataFrame, iterations: Int, dampingPct: Int,
-      prepNodes: DataFrame): DataFrame = {
+      prepNodes: Option[DataFrame]): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100]: $dampingPct")
     val nodes = seeded.localCheckpoint()
-    Checkpoints.release(prepNodes)
+    prepNodes.foreach(Checkpoints.release)
     val eSorted = loop.layout(eDeg, "src")
     Checkpoints.release(eDeg)
     val rotate = loop.rotating()

@@ -15,7 +15,7 @@ object VerifyQueries extends QueryGroup {
       """SELECT (SELECT count(*) FROM lineitem) AS lineitem_cnt,
            (SELECT count(*) FROM orders) AS orders_cnt,
            (SELECT count(*) FROM events) AS events_cnt""") { (spark, dir) =>
-      Tables.registerAll(spark, dir)
+      Tables.registerAll(spark, dir, Seq("lineitem", "orders", "events"))
       spark.sql(
         """SELECT (SELECT count(*) FROM lineitem) AS lineitem_cnt,
              (SELECT count(*) FROM orders) AS orders_cnt,

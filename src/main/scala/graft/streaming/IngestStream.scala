@@ -143,6 +143,8 @@ object IngestStream {
           kept(kd.unionByName(survivors)); Checkpoints.release(survivors)
       }
     })
+    // the seen-corpus-sized indexes: the result does not read them
+    bands.releaseLast(); docs.releaseLast()
     kept.last.getOrElse(seenDocs.select(col(idCol)).limit(0))
   }
 

@@ -1,0 +1,68 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.Fixpoint
+import graft.queries.Catalog
+
+/** The loop scope's planner settings: no runtime bloom filter in a
+  * round plan. */
+class FixpointSpec extends AnyFunSuite {
+  import TestSession._
+
+  private val bloom = "spark.sql.optimizer.runtime.bloomFilter.enabled"
+
+  /** Every optimized plan of the actions `body` runs. */
+  private def plansOf(body: => Any): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.optimizedPlan.toString): Unit
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    GraftColumnBridge.drainListeners(spark)
+    spark.listenerManager.register(l)
+    try { body; GraftColumnBridge.drainListeners(spark) }
+    finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  test("a join of a filtered checkpoint with a join-born checkpoint " +
+      "gets a bloom filter outside the scope, none inside, and the " +
+      "setting is restored") {
+    def ids(n: Long, c: String) = spark.range(0, n).select(col("id").as(c))
+    // a checkpoint carries its origin plan's size estimate: a join's is
+    // the product of its sides, far over the application-side threshold
+    val state = ids(1000, "node").join(ids(1000, "node"), "node")
+      .join(ids(1000, "node"), "node")
+      .select(col("node"), (col("node") * 3).as("rank")).localCheckpoint()
+    val edges = spark.range(0, 3000)
+      .select((col("id") % 1000).as("src"), (col("id") % 997).as("dst"))
+      .localCheckpoint()
+    def round: DataFrame = edges.filter(col("dst") =!= 5)
+      .join(state, col("src") === col("node"))
+    def bloomed = round.queryExecution.optimizedPlan.toString
+      .contains("might_contain")
+    val kb = "spark.sql.autoBroadcastJoinThreshold"
+    val (prev, pb) = (spark.conf.get(bloom), spark.conf.get(kb))
+    spark.conf.set(kb, "-1")
+    try assert(bloomed, "control: no bloom filter outside the scope")
+    finally spark.conf.set(kb, pb)
+    Fixpoint.scope(spark, 1, allowBroadcast = false)(_ => assert(!bloomed))
+    assert(spark.conf.get(bloom) == prev)
+    graft.core.Checkpoints.release(state)
+    graft.core.Checkpoints.release(edges)
+  }
+
+  test("q_pagerank's round plans carry no runtime bloom filter") {
+    val plans = plansOf(Catalog.byName("q_pagerank").fn(spark, sf).collect())
+    assert(plans.nonEmpty)
+    assert(!plans.exists(_.contains("might_contain")))
+  }
+}

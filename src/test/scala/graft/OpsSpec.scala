@@ -1616,7 +1616,9 @@ class StreamingSpec extends AnyFunSuite {
       // b1 strictly earlier so maxFilesPerTrigger=1 yields the
       // intended batch sequence deterministically
       p1.toFile.setLastModified(p2.toFile.lastModified() - 60000L)
-      val kept = graft.streaming.IngestStream.runNearDedupToBatch(spark,
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val keptDf = graft.streaming.IngestStream.runNearDedupToBatch(spark,
           staged.toString, seenBands, seenDocs,
           schema = org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("doc_id",
@@ -1624,7 +1626,12 @@ class StreamingSpec extends AnyFunSuite {
             org.apache.spark.sql.types.StructField("text",
               org.apache.spark.sql.types.StringType))),
           maxFilesPerTrigger = Some(1))
-        .collect().map(_.getLong(0)).toSet
+      val kept = keptDf.collect().map(_.getLong(0)).toSet
+      // only the returned survivor ids stay persisted: the band and doc
+      // index checkpoints are freed when the stream ends
+      val leaked = sc.getPersistentRDDs.keySet -- before
+      assert(leaked.size <= 1, s"leaked ${leaked.size}")
+      graft.core.Checkpoints.release(keptDf)
       assert(kept == Set(11L, 12L, 21L), s"got $kept")
       // sequential ingest ≡ the single-batch twin over the union (at
       // minJaccard = 1.0 near-dup is set-equality, so batch

@@ -142,10 +142,13 @@ class StreamRunSpec extends AnyFunSuite {
   }
 
   test("catalog streams keep their micro-batch and job counts at sf0.001") {
-    // (micro-batches, jobs) as measured before the drives were shared:
+    // (micro-batches, jobs) with every table schema already inferred:
     // a drain that adds or drops a trigger or an action moves them
-    val want = Seq("q_stream_kmv" -> (3, 16),
-      "q_stream_funnel_ooo" -> (6, 17), "q_stream_window_agg" -> (1, 2))
-    want.foreach { case (q, pin) => assert(counts(q) == pin, q) }
+    val want = Seq("q_stream_kmv" -> (3, 15),
+      "q_stream_funnel_ooo" -> (6, 16), "q_stream_window_agg" -> (1, 2))
+    // the table schemas are inferred once per JVM: warm them, so no pin
+    // depends on which spec read a table first
+    graft.core.Tables.names.foreach(graft.core.Tables.df(spark, sf, _))
+    assert(want.map { case (q, _) => q -> counts(q) } == want)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Graph, Quality, Scd, Sketch, Stats}
@@ -256,6 +257,34 @@ class GraphSpec extends AnyFunSuite {
     // contract is: only the returned frame's checkpoint remains
     assert(leaked.size <= 1, s"leaked ${leaked.size} persisted RDDs")
     graft.core.Checkpoints.release(r)
+  }
+
+  test("a checkpointed caller universe outlives pageRank, trustRank " +
+      "and hits: they release only the checkpoints they made") {
+    val sc = spark.sparkContext
+    val nodes = Seq(0L, 1L, 2L, 3L, 9L).toDF("node").localCheckpoint()
+    val mine = graft.core.Checkpoints.rddsOf(nodes).map(_.id)
+    assert(mine.nonEmpty)
+    val runs: Seq[(String, () => DataFrame)] = Seq(
+      "pageRank + count" -> (() => Graph.pageRank(cycle4, "src", "dst",
+        iterations = 3, nodesOpt = Some(nodes), nNodesOpt = Some(5L))),
+      "pageRank" -> (() => Graph.pageRank(cycle4, "src", "dst",
+        iterations = 3, nodesOpt = Some(nodes))),
+      "trustRank" -> (() => Graph.trustRank(cycle4, "src", "dst",
+        Seq(0L).toDF("s"), iterations = 3, nodesOpt = Some(nodes))),
+      "hits + count" -> (() => Graph.hits(cycle4, "src", "dst",
+        iterations = 3, nodesOpt = Some(nodes), nNodesOpt = Some(5L))),
+      "hits" -> (() => Graph.hits(cycle4, "src", "dst",
+        iterations = 3, nodesOpt = Some(nodes))))
+    runs.foreach { case (name, run) =>
+      val r = run()
+      assert(r.count() == 5, name)
+      assert(mine.forall(sc.getPersistentRDDs.contains),
+        s"$name released the caller's universe")
+      graft.core.Checkpoints.release(r)
+    }
+    assert(nodes.count() == 5)
+    graft.core.Checkpoints.release(nodes)
   }
 
   test("deterministic across runs") {
