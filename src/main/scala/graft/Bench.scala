@@ -612,29 +612,9 @@ object Bench {
     // floor-adjusted regression metric — a round-count-dominated
     // query's wall is ~ jobs × serial floor, so the regression
     // adjudicator can subtract the measured floor LIFT × jobs and
-    // emit a ratio the box noise cannot inflate. Counted via
-    // listener; the bus is async, so each reading settles by polling
-    // until stable (typically one 5 ms round — outside the timed
-    // window).
-    val jobCounter = new org.apache.spark.scheduler.SparkListener {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        { n.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(jobCounter)
-    // settle bounded at 10 polls (r20 verdict #1c: worst-case settling
-    // cost must stay negligible against the suite — 50 ms/site hard
-    // cap, and the sites only exist in pass 1 now)
-    def settledJobCount(): Int = {
-      var last = -1
-      var cur = jobCounter.n.get()
-      var i = 0
-      while (cur != last && i < 10) {
-        last = cur; Thread.sleep(5); cur = jobCounter.n.get(); i += 1
-      }
-      cur
-    }
+    // emit a ratio the box noise cannot inflate. Counted by a Watch
+    // around the pass-1 sample, whose bus drains fall outside the
+    // timed window.
     val jobsOf = scala.collection.mutable.Map.empty[String, Int]
     // NaN on failure — never the elapsed time of the exception path. A
     // crashing query must not masquerade as a fast timing (and with the
@@ -680,11 +660,12 @@ object Bench {
       suite.map { case (name, fn) =>
         // job counts are deterministic per query — counted in pass 1
         // only (the p2/repeat samples would just re-measure the same
-        // number while paying the settle polls again)
-        val countJobs = tag == "p1"
-        val j0 = if (countJobs) settledJobCount() else 0
-        val t1 = time(s"$name/$tag", fn)
-        if (countJobs && !t1.isNaN) jobsOf(name) = settledJobCount() - j0
+        // number while paying the bus drains again)
+        val t1 = if (tag != "p1") time(s"$name/$tag", fn) else {
+          val (t, r) = graft.obs.Watch(spark)(time(s"$name/$tag", fn))
+          if (!t.isNaN) jobsOf(name) = r.jobs.size
+          t
+        }
         val t = if (t1.isNaN || t1 > 2.0) t1
                 else math.min(t1, time(s"$name/$tag-rep", fn))
         System.err.println(f"bench [$tag] $name%-30s $t%8.3f s")

@@ -66,12 +66,14 @@ object Fixpoint {
     * The caller has already COUNTED its loop-invariant frames, so the
     * post-shuffle partition count is a one-time function of known
     * cardinality instead of AQE's per-stage re-plan.
-    * `allowBroadcast = true` keeps size-based broadcast planning: loop
-    * state frames are local CHECKPOINTS, whose stats are their actual
-    * materialized bytes, so the planner broadcasts exactly when the
-    * state really is small and switches to the shuffle join at scale.
-    * Pass false for loops that join |V|-sized state against a
-    * [[Scope.layout]] (see there for why that plan wins).
+    * `allowBroadcast = true` keeps size-based broadcast planning. Loop
+    * state frames are local CHECKPOINTS, whose stats are their origin
+    * plan's size estimate, not their materialized bytes (see the bloom
+    * filter below): state born of a join reads as the product of its
+    * sides and does not broadcast by size, however small it is; only
+    * state whose origin estimate is small does. Pass false for loops
+    * that join |V|-sized state against a [[Scope.layout]] (see there
+    * for why that plan wins).
     *
     * The runtime bloom filter is off inside the scope. A checkpoint's
     * `LogicalRDD` carries its origin plan's size ESTIMATE, and a

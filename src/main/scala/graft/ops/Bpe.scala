@@ -163,10 +163,9 @@ object Bpe {
     val spark = docs.sparkSession
     val merges = ArrayBuffer.empty[Merge]
     if (maxMerges == 0) return merges.toSeq
-    // one corpus pass; the checkpoint also gives loopPartitionsOf a
-    // real row count without re-running the corpus aggregation
-    val seed = seedWords(docs, textCol).localCheckpoint()
-    val vocabRows = seed.count()
+    // one corpus pass; the checkpoint job also counts the rows that
+    // size loopPartitionsOf, without re-running the corpus aggregation
+    val (seed, vocabRows) = Checkpoints.counted(seedWords(docs, textCol))
     val p = Fixpoint.loopPartitionsOf(math.max(1L, vocabRows))
     val cpEvery =
       if (checkpointEvery > 0) checkpointEvery
@@ -338,10 +337,11 @@ object Bpe {
     val spark = docs.sparkSession
     val merges = ArrayBuffer.empty[Merge]
     if (maxMerges == 0) return merges.toSeq
-    // seed once under AQE for the row count; the loop-state copy is
-    // re-checkpointed word-partitioned under the static planner below
-    val seed0 = seedWordsKeyed(docs, textCol).localCheckpoint()
-    val vocabRows = seed0.count()
+    // seed once under AQE, counted by the checkpoint job; the
+    // loop-state copy is re-checkpointed word-partitioned under the
+    // static planner below
+    val (seed0, vocabRows) =
+      Checkpoints.counted(seedWordsKeyed(docs, textCol))
     val p = Fixpoint.loopPartitionsOf(math.max(1L, vocabRows))
     val cpW =
       if (checkpointEvery > 0) checkpointEvery
@@ -514,8 +514,8 @@ object Bpe {
     val spark = docs.sparkSession
     val merges = ArrayBuffer.empty[Merge]
     if (maxMerges == 0) return AutoLearn(Nil, "incremental", 0.0)
-    val seed0 = seedWordsKeyed(docs, textCol).localCheckpoint()
-    val vocabRows = seed0.count()
+    val (seed0, vocabRows) =
+      Checkpoints.counted(seedWordsKeyed(docs, textCol))
     val p = Fixpoint.loopPartitionsOf(math.max(1L, vocabRows))
     var affectedSum = 0L
     var probed = 0

@@ -385,16 +385,18 @@ object Similarity {
     * components, the j-th subvector of the ksub vectors ranked first by
     * the Lehmer permutation [[Sampling.hashU31]] (a deterministic
     * pseudo-random sample — consecutive-id slices would inherit the
-    * corpus' label clustering), cid by rank. One bounded count over the
-    * ksub-row frame fixes the LUT stride (see [[Pq.search]]). */
+    * corpus' label clustering), cid by rank. The checkpoint job also
+    * counts the ksub-row frame, which fixes the LUT stride (see
+    * [[Pq.search]]). */
   private def pqCodebook(emb: DataFrame, m: Int, dsub: Int, ksub: Int,
       op: String): Pq = {
     val cbW = Window.orderBy(col("hk"), col("id"))
-    val cb = emb.withColumn("hk", Sampling.hashU31(col("id")))
-      .orderBy(col("hk"), col("id")).limit(ksub)
-      .withColumn("cid", row_number().over(cbW) - 1)
-      .localCheckpoint() // consumed 3x (count + 2 joins): cut the lineage once
-    val nCb = cb.count().toInt
+    // consumed by 2 joins: cut the lineage once
+    val (cb, n) = graft.core.Checkpoints.counted(
+      emb.withColumn("hk", Sampling.hashU31(col("id")))
+        .orderBy(col("hk"), col("id")).limit(ksub)
+        .withColumn("cid", row_number().over(cbW) - 1))
+    val nCb = n.toInt
     require(nCb > 0, s"$op: no indexable vectors to build a codebook from")
     val subs = explode(array((0 until m).map(j =>
       struct(lit(j).as("j"),

@@ -1,11 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
-
 import graft.core.GraftSession
+import graft.obs.Watch
 import graft.queries.Catalog
 
 /** Dev tool: runs catalog queries and dumps, for EVERY action each
@@ -14,53 +10,59 @@ import graft.queries.Catalog
   * operators (power loops, HITS, k-core, connected components,
   * classifier epochs, BPE rounds) that the final frame's explain
   * cannot show. Each query's file ends with its job count and an MD5
-  * of its sorted result rows, so the dumps of two checkouts diff
-  * directly once exprIds (`#123`) and `plan_id=` are stripped.
+  * of its sorted result rows; `tools/plandiff.py` compares the dumps
+  * of two checkouts.
   *
-  *   runMain graft.tools.LoopPlanDump <sfDir> <outDir> <query>...
+  * With `--runs N`, each query is then timed N more times (a `count`
+  * of its frame, same session) and one line per run goes to stdout:
+  * wall, jobs, stages, tasks, summed task time and GC, idle (the part
+  * of the wall no task was running) and shuffle read/write. Task time
+  * up, GC up or idle up with task time flat tell apart slower tasks, a
+  * pausing JVM and a growing driver/scheduler floor.
+  *
+  *   runMain graft.tools.LoopPlanDump [--runs N] <sfDir> <outDir> <query>...
   *
   * Runs `local[SPARK_GRAFT_CPUS]` (default: the available processors),
   * one session for all queries, in the order given. */
 object LoopPlanDump {
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val (runs, args) = argv.toList match {
+      case "--runs" :: n :: rest => (n.toInt, rest)
+      case rest => (0, rest)
+    }
     require(args.length >= 3,
-      "usage: LoopPlanDump <sfDir> <outDir> <query>...")
-    val Array(dir, outDir) = args.take(2)
+      "usage: LoopPlanDump [--runs N] <sfDir> <outDir> <query>...")
+    val dir :: outDir :: names = args
     val spark = GraftSession.local(sys.env.get("SPARK_GRAFT_CPUS")
       .map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors()))
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution,
-          d: Long): Unit =
-        plans.add(s"\n========== action=$f ==========\n" +
-          s"-- optimized --\n${qe.optimizedPlan}\n" +
-          s"-- physical --\n${qe.sparkPlan}\n" +
-          s"-- executed --\n${qe.executedPlan}"): Unit
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    })
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    })
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    for (name <- args.drop(2)) {
-      GraftColumnBridge.drainListeners(spark)
-      plans.clear(); jobs.set(0)
-      val rows = Catalog.byName(name).fn(spark, dir).collect()
-        .map(_.toString).sorted
+    for (name <- names) {
+      val fn = Catalog.byName(name).fn
+      val (rows, r) = Watch(spark)(
+        fn(spark, dir).collect().map(_.toString).sorted)
       val md5 = java.security.MessageDigest.getInstance("MD5")
         .digest(rows.mkString("\n").getBytes("UTF-8"))
         .map("%02x".format(_)).mkString
-      // the listener bus is async: drain it so no plan or job is lost
-      GraftColumnBridge.drainListeners(spark)
-      import scala.jdk.CollectionConverters._
+      val plans = r.actions.map { case Watch.Action(f, qe) =>
+        s"\n========== action=$f ==========\n" +
+          s"-- optimized --\n${qe.optimizedPlan}\n" +
+          s"-- physical --\n${qe.sparkPlan}\n" +
+          s"-- executed --\n${qe.executedPlan}"
+      }
       val out = java.nio.file.Paths.get(outDir, s"$name.txt")
-      java.nio.file.Files.writeString(out, plans.asScala.mkString("\n") +
-        s"\n\n[summary] jobs=${jobs.get} rows=${rows.length} md5=$md5\n")
+      java.nio.file.Files.writeString(out, plans.mkString("\n") +
+        s"\n\n[summary] jobs=${r.jobs.size} rows=${rows.length} md5=$md5\n")
       println(s"[loop-plan-dump] $name: ${plans.size} plans, " +
-        s"${jobs.get} jobs, ${rows.length} rows, md5 $md5 -> $out")
+        s"${r.jobs.size} jobs, ${rows.length} rows, md5 $md5 -> $out")
+      (1 to runs).foreach { i =>
+        val (_, d) = Watch(spark)(fn(spark, dir).count())
+        def s(ms: Long) = f"${ms / 1000.0}%.3fs"
+        def mb(b: Long) = f"${b / 1048576.0}%.1fMB"
+        println(s"diag $name run$i wall=${s(d.wallMs)} " +
+          s"jobs=${d.jobs.size} stages=${d.stages} tasks=${d.tasks} " +
+          s"taskTime=${s(d.taskMs)} gc=${s(d.gcMs)} idle=${s(d.idleMs)} " +
+          s"shufR=${mb(d.shuffleReadBytes)} shufW=${mb(d.shuffleWriteBytes)}")
+      }
     }
     spark.stop()
   }

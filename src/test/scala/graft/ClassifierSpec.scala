@@ -145,51 +145,31 @@ class ClassifierSpec extends AnyFunSuite {
       "checkpoint's own layout — no sort, no doc-keyed exchange, " +
       "exactly one (model-sized) shuffle") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.WindowExec
-    val plans =
-      new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = plans.add(qe.executedPlan): Unit
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
     val labeled = Classifier.realVsShuffled(
       (1L to 40L).map(i => (i, s"w$i x y z${i % 7} q${i % 3}"))
         .toDF("doc_id", "text"),
       "doc_id", "text")
-    spark.listenerManager.register(ql)
-    try {
-      Classifier.train(labeled, "doc_id", "text", "y",
-        Classifier.Config(epochs = 3))
-      // the listener bus is async — settle until the three epoch
-      // plans (the only WindowExec plans train emits) have arrived
-      var i = 0
-      def epochPlans = {
-        import scala.jdk.CollectionConverters._
-        plans.asScala.toSeq.filter(
-          _.collect { case w: WindowExec => w }.nonEmpty)
-      }
-      while (epochPlans.size < 3 && i < 200) { Thread.sleep(10); i += 1 }
-      val eps = epochPlans
-      assert(eps.size === 3, s"expected 3 epoch plans, got ${eps.size}")
-      eps.foreach { p =>
-        val sorts = p.collect { case s: SortExec => s }
-        val exchanges = p.collect { case e: ShuffleExchangeExec => e }
-        assert(sorts.isEmpty,
-          s"epoch plan re-sorts (checkpoint ordering lost):\n$p")
-        // at most ONE shuffle (the model-sized gradient agg); at
-        // fixture scale the loop sizes p = 1 and even that exchange
-        // vanishes (SinglePartition satisfies any distribution)
-        assert(exchanges.size <= 1,
-          s"epoch plan carries ${exchanges.size} shuffles " +
-            s"(expected <=1, the model-sized gradient agg):\n$p")
-      }
-    } finally spark.listenerManager.unregister(ql)
+    val (_, r) = graft.obs.Watch(spark)(Classifier.train(labeled,
+      "doc_id", "text", "y", Classifier.Config(epochs = 3)))
+    // the three epoch plans are the only WindowExec plans train emits
+    val eps = r.actions.map(_.qe.executedPlan)
+      .filter(_.collect { case w: WindowExec => w }.nonEmpty)
+    assert(eps.size === 3, s"expected 3 epoch plans, got ${eps.size}")
+    eps.foreach { p =>
+      val sorts = p.collect { case s: SortExec => s }
+      val exchanges = p.collect { case e: ShuffleExchangeExec => e }
+      assert(sorts.isEmpty,
+        s"epoch plan re-sorts (checkpoint ordering lost):\n$p")
+      // at most ONE shuffle (the model-sized gradient agg); at
+      // fixture scale the loop sizes p = 1 and even that exchange
+      // vanishes (SinglePartition satisfies any distribution)
+      assert(exchanges.size <= 1,
+        s"epoch plan carries ${exchanges.size} shuffles " +
+          s"(expected <=1, the model-sized gradient agg):\n$p")
+    }
   }
 
   test("hard sigmoid clamps symmetrically: a saturated-correct doc " +

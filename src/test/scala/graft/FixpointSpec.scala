@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Fixpoint
+import graft.obs.Watch
 import graft.queries.Catalog
 
 /** The loop scope's planner settings: no runtime bloom filter in a
@@ -17,21 +16,8 @@ class FixpointSpec extends AnyFunSuite {
   private val bloom = "spark.sql.optimizer.runtime.bloomFilter.enabled"
 
   /** Every optimized plan of the actions `body` runs. */
-  private def plansOf(body: => Any): Seq[String] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        plans.add(qe.optimizedPlan.toString): Unit
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    }
-    GraftColumnBridge.drainListeners(spark)
-    spark.listenerManager.register(l)
-    try { body; GraftColumnBridge.drainListeners(spark) }
-    finally spark.listenerManager.unregister(l)
-    import scala.jdk.CollectionConverters._
-    plans.asScala.toSeq
-  }
+  private def plansOf(body: => Any): Seq[String] =
+    Watch(spark)(body)._2.actions.map(_.qe.optimizedPlan.toString)
 
   test("a join of a filtered checkpoint with a join-born checkpoint " +
       "gets a bloom filter outside the scope, none inside, and the " +

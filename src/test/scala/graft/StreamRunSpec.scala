@@ -2,14 +2,14 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryException, StreamingQueryListener}
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Watch
 import graft.queries.Catalog
 import graft.streaming.{IngestStream, StreamRun}
 
@@ -114,31 +114,9 @@ class StreamRunSpec extends AnyFunSuite {
   /** Micro-batches (query progress events) and Spark jobs of one catalog
     * query: its call plus the collect of its result. */
   private def counts(query: String): (Int, Int) = {
-    val batches = new java.util.concurrent.atomic.AtomicInteger()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val sl = new StreamingQueryListener {
-      import StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        batches.incrementAndGet(): Unit
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
     // stream jobs run under the query's own job group: count them all
-    val jl = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    GraftColumnBridge.drainListeners(spark)
-    spark.streams.addListener(sl)
-    spark.sparkContext.addSparkListener(jl)
-    try {
-      Catalog.byName(query).fn(spark, sf).collect()
-      GraftColumnBridge.drainListeners(spark)
-    } finally {
-      spark.streams.removeListener(sl)
-      spark.sparkContext.removeSparkListener(jl)
-    }
-    (batches.get, jobs.get)
+    val r = Watch(spark)(Catalog.byName(query).fn(spark, sf).collect())._2
+    (r.batches, r.jobs.size)
   }
 
   test("catalog streams keep their micro-batch and job counts at sf0.001") {

@@ -2,13 +2,13 @@ package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
+import graft.obs.Watch
 
 /** `Tables.df`'s schema memo: one inference per file, the inferred
   * schema itself, the events.ts normalization on top, and a rewritten
@@ -17,18 +17,7 @@ class TablesSpec extends AnyFunSuite {
   import TestSession._
 
   /** Spark jobs started while `body` runs. */
-  private def jobsOf(body: => Any): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    GraftColumnBridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(l)
-    try { body; GraftColumnBridge.drainListeners(spark) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get
-  }
+  private def jobsOf(body: => Any): Int = Watch(spark)(body)._2.jobs.size
 
   /** `df` written as the single parquet file `dir/<name>.parquet`. */
   private def stage(df: DataFrame, dir: Path, name: String): Path = {

@@ -840,38 +840,21 @@ class RankSketchSpec extends AnyFunSuite {
   private val D = 2
   private val W = 8192
 
-  /** Captures every SQL execution's physical-plan description fired
-    * while `body` runs and returns each plan's ReusedExchange node
-    * count — the DIRECT plan-shape probe backing the job-count pins
-    * below (r19 advice: a job-count drift alone is undiagnosable; a
-    * planner change that drops the reuse should fail naming the
-    * missing node). Uses the SQLExecutionStart event rather than
-    * QueryExecutionListener so checkpoint materializations inside the
-    * walk are captured too. */
-  private def reusedExchangeCounts(body: => Unit): Seq[Int] = {
-    val plans =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case s: org.apache.spark.sql.execution.ui
-              .SparkListenerSQLExecutionStart =>
-            plans.add(s.physicalPlanDescription): Unit
-          case _ => ()
-        }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // the listener bus is async — poll until the capture is stable
-      var last = -1
-      var cur = plans.size
-      while (cur != last) { last = cur; Thread.sleep(300); cur = plans.size }
-    } finally spark.sparkContext.removeSparkListener(l)
-    import scala.jdk.CollectionConverters._
-    plans.asScala.toSeq
-      .map(p => "ReusedExchange".r.findAllIn(p).size)
+  /** Runs `body` under a job group of its own and returns each SQL
+    * execution's ReusedExchange node count — the DIRECT plan-shape
+    * probe backing the job-count pins below (r19 advice: a job-count
+    * drift alone is undiagnosable; a planner change that drops the
+    * reuse should fail naming the missing node) — and the jobs of that
+    * group. Reads the SQL execution-start plans rather than the
+    * actions' so checkpoint materializations inside the walk are
+    * captured too. */
+  private def walkCounts(body: => Unit): (Seq[Int], Int) = {
+    val sc = spark.sparkContext
+    val group = s"walk-jobpin-${System.nanoTime()}"
+    sc.setJobGroup(group, "join-walk job-count pin")
+    val r = try graft.obs.Watch(spark)(body)._2 finally sc.clearJobGroup()
+    (r.sqlPlans.map("ReusedExchange".r.findAllIn(_).size),
+      r.jobs.count(_.group.contains(group)))
   }
 
   private def cells(df: org.apache.spark.sql.DataFrame) =
@@ -961,14 +944,10 @@ class RankSketchSpec extends AnyFunSuite {
     }.toDF("grp", "x")
     val big = Sketch.rankGridBy(df, col("x"), Seq("grp"), D, 64)
       .localCheckpoint() // build outside the counted window
-    val sc = spark.sparkContext
-    val group = s"walk-jobpin-${System.nanoTime()}"
-    sc.setJobGroup(group, "join-walk job-count pin")
-    val reuse =
-      try reusedExchangeCounts {
-        Sketch.rankQuantilesByJoin(big, Seq("grp"), Seq(500), D, 64)
-          .collect(): Unit
-      } finally sc.clearJobGroup()
+    val (reuse, cur) = walkCounts {
+      Sketch.rankQuantilesByJoin(big, Seq("grp"), Seq(500), D, 64)
+        .collect(): Unit
+    }
     info(s"fused walk ReusedExchange counts per plan: $reuse")
     // direct plan-shape pin behind the job count: each fused
     // checkpoint window's plan must actually carry the reuse node
@@ -976,11 +955,6 @@ class RankSketchSpec extends AnyFunSuite {
       "no executed plan in the fused walk carried a ReusedExchange " +
         "node — the cross-round broadcast reuse is gone (job-count " +
         s"drift would follow); per-plan counts: $reuse")
-    // the status store is fed asynchronously — poll until stable
-    def jobsNow = sc.statusTracker.getJobIdsForGroup(group).length
-    var last = -1
-    var cur = jobsNow
-    while (cur != last) { last = cur; Thread.sleep(300); cur = jobsNow }
     // measured 17 on this fixture with the shared window build (plan
     // inspection: each 2-round checkpoint plan holds 1 BroadcastExchange
     // + 1 ReusedExchange); losing the reuse adds one build per plan
@@ -1007,14 +981,10 @@ class RankSketchSpec extends AnyFunSuite {
     }.toDF("grp", "x")
     val big = Sketch.rankGridBy(df, col("x"), Seq("grp"), D, 64)
       .localCheckpoint() // build outside the counted window
-    val sc = spark.sparkContext
-    val group = s"walk-seq-jobpin-${System.nanoTime()}"
-    sc.setJobGroup(group, "sequential join-walk job-count pin")
-    val reuse =
-      try reusedExchangeCounts {
-        Sketch.rankQuantilesByJoin(big, Seq("grp"), Seq(500), D, 64)
-          .collect(): Unit
-      } finally sc.clearJobGroup()
+    val (reuse, cur) = walkCounts {
+      Sketch.rankQuantilesByJoin(big, Seq("grp"), Seq(500), D, 64)
+        .collect(): Unit
+    }
     info(s"sequential walk ReusedExchange counts per plan: $reuse")
     // direct plan-shape pin (r19 advice): the `_lvl` reuse means each
     // 4-round checkpoint plan shares ONE window broadcast across its
@@ -1025,10 +995,6 @@ class RankSketchSpec extends AnyFunSuite {
       "no executed plan in the sequential walk carried >= 3 " +
         "ReusedExchange nodes — the `_lvl` cross-round broadcast " +
         s"reuse is gone; per-plan counts: $reuse")
-    def jobsNow = sc.statusTracker.getJobIdsForGroup(group).length
-    var last = -1
-    var cur = jobsNow
-    while (cur != last) { last = cur; Thread.sleep(300); cur = jobsNow }
     info(s"sequential join walk submitted $cur jobs")
     // measured 18 on this fixture with the shared `_lvl` window build
     // (4 checkpoint plans, each 1 BroadcastExchange + 3
